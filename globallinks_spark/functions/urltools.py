@@ -1,15 +1,14 @@
 """URL & domain kernel — P1-P11 of the operator inventory (SURVEY §2.2).
 
-Everything is a Column expression, including ``etld_plus_one``: the
-public-suffix computation (reference: golang.org/x/net/publicsuffix via
-/root/reference/pkg/commoncrawl/wat.go:660-672) evaluates the FULL
-bundled Mozilla PSL snapshot (~9.5k rules, ``functions/psl.py``) as a
-short when-chain of Catalyst ``InSet`` hash-probes — one per distinct
-suffix length, longest first — so it runs inside whole-stage codegen
-with no Python worker. ``etld_plus_one_udf`` is the same algorithm as a
-pandas UDF (per-worker memo cache, the analogue of the reference's
-domainCache, wat.go:139-143); it exists for API parity and as the
-cross-check in tests, not for the hot path.
+Everything is a Column expression. The public-suffix computation
+(reference: golang.org/x/net/publicsuffix via
+/root/reference/pkg/commoncrawl/wat.go:660-672) has exactly one Spark
+form, ``with_registrable_domain``: it evaluates the FULL bundled Mozilla
+PSL snapshot (~9.5k rules, ``functions/psl.py``) with two broadcast
+suffix-table joins for the large rule lengths and small inline ``InSet``
+probes for the rest, inside whole-stage codegen with no Python worker.
+``psl.etld_plus_one_py`` is the pure-Python spec it is tested against
+and the form the driver-side API path calls per request.
 
 Semantics cited into the reference:
 - URL parse + host normalize + default path: buildURLRecord wat.go:623-678
@@ -21,48 +20,16 @@ Semantics cited into the reference:
 
 from __future__ import annotations
 
-import re
-
-import pandas as pd
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from globallinks_spark.config import IGNORED_QUERY_PREFIXES
 from globallinks_spark.functions import psl
+from globallinks_spark.functions.binding import bind_once
 
 # ---------------------------------------------------------------------------
 # Public-suffix kernel. Rule data + the pure-Python spec live in
-# functions/psl.py (full bundled Mozilla snapshot, ~9.5k rules). The
-# names below are the stable test surface.
-
-_PSL_RULES: frozenset[str] = psl.RULES
-
-
-def _psl_suffix_len(labels: list[str]) -> int:
-    """Number of labels in the public suffix of ``labels`` per PSL rules."""
-    return psl.suffix_len(labels)
-
-
-def _etld1_one(host: str) -> str | None:
-    return psl.etld_plus_one_py(host)
-
-
-@F.pandas_udf(T.StringType())
-def etld_plus_one_udf(host: pd.Series) -> pd.Series:
-    """Registrable domain (eTLD+1) of an already-lowercased host; null when
-    the host has none (unparseable / bare public suffix) — the reference
-    drops those rows (wat.go:662-666 error path).
-
-    Same full-PSL algorithm as the JVM expression below (``psl.py`` is
-    the shared spec; its lru_cache is the analogue of the reference's
-    domainCache). Kept for API parity and as the cross-check in
-    tests/test_psl_properties.py — the hot path uses ``etld_plus_one``,
-    because a per-link Python round trip dominated extraction cost
-    (measured 13× below the reference's pages/min baseline with the UDF,
-    see bench_extract.py)."""
-    return host.map(_etld1_one, na_action="ignore")
-
+# functions/psl.py (full bundled Mozilla snapshot, ~9.5k rules).
 
 # Literal Columns are py4j objects; building ~9.5k of them costs ~1 s of
 # driver round trips, so build once per process and reuse (unresolved
@@ -79,11 +46,9 @@ def _psl_lits(kind: str, k: int, values: frozenset[str]) -> list[Column]:
 
 
 def _etld_expr_parts(
-    host: Column,
-    big_markers: dict[int, Column] | None = None,
-    labels: Column | None = None,
+    host: Column, big_markers: dict[int, Column], labels: Column,
 ) -> Column:
-    """The eTLD+1 Column tree over ``host``.
+    """The eTLD+1 Column tree over ``host`` split into ``labels``.
 
     ``big_markers`` maps a suffix length s to a boolean Column that is
     true when the host's length-s suffix is an exact rule of that
@@ -94,14 +59,6 @@ def _etld_expr_parts(
     for thousands: a ~9.5k-literal tree bloats every task binary and
     generates methods the JIT takes tens of seconds to converge on).
     """
-    big_markers = big_markers or {}
-    if labels is None:
-        # strip leading/trailing dots before splitting — the pure-Python
-        # spec does (psl.etld_plus_one_py), and without it a trailing dot
-        # ('example.com.') adds an empty label, every suffix probe
-        # misses, and the expression emits 'com.' instead of the spec's
-        # 'example.com'
-        labels = F.split(F.regexp_replace(host, r"^\.+|\.+$", ""), r"\.")
     n = F.size(labels)
 
     def suffix(k: int) -> Column:
@@ -159,12 +116,6 @@ def _etld_expr_parts(
     ).otherwise(out)
 
 
-def _build_etld_expr(host: Column) -> Column:
-    """Pure-expression eTLD+1 (all rule sets inline). See
-    ``etld_plus_one`` for when this is the right shape."""
-    return _etld_expr_parts(host)
-
-
 # Packed suffix-rule strings for the two large rule lengths —
 # session-INDEPENDENT, so a plain module dict is safe. Only the string
 # is cached: an earlier version cached the built DataFrames weak-keyed
@@ -196,26 +147,32 @@ def _suffix_df(spark, k: int):
 
 
 def with_registrable_domain(
-    df: "DataFrame", host_col: str, out_col: str, bind: bool = False
-) -> "DataFrame":
-    """eTLD+1 as a broadcast-join transform — the 100 TB hot path.
+    df: DataFrame, host_col: str, out_col: str
+) -> DataFrame:
+    """eTLD+1 of ``host_col`` into ``out_col`` as a broadcast-join
+    transform — the one Spark form of the kernel, and the 100 TB hot
+    path. NULL and empty hosts map to NULL.
 
-    The inline-expression form (``etld_plus_one``) embeds ~9.5k string
-    literals in the plan: every task binary carries the serialized sets
-    (~1.8 MB), generated methods balloon, and HotSpot needs tens of
-    seconds of C2 time per stage to reach steady state — measured 2×
-    end-to-end extraction slowdown even warm. This form moves the two
-    big rule sets (two- and three-label exact rules) into broadcast hash
-    joins: the host's length-2 and length-3 suffixes are computed once,
-    left-joined against ~8 k-row broadcast tables (map-side, no
-    shuffle, no row multiplication — rule tables are distinct), and the
-    remaining ~250 rules (4/5-label exacts, wildcard tails, exceptions)
-    stay as small inline ``InSet`` probes. Per-row cost: one split, two
-    broadcast-hash probes, ~6 small set probes.
+    The two big rule sets (two- and three-label exact rules) live in
+    broadcast hash joins: the host's length-2 and length-3 suffixes are
+    computed once, left-joined against ~8 k-row broadcast tables
+    (map-side, no shuffle, no row multiplication — rule tables are
+    distinct), and the remaining ~250 rules (4/5-label exacts, wildcard
+    tails, exceptions) stay as small inline ``InSet`` probes. Per-row
+    cost: one split, two broadcast-hash probes, ~6 small set probes.
+    Inlining all ~9.5k rules instead bloats every task binary (~1.8 MB)
+    and costs tens of seconds of JIT warm-up per stage — measured 2×
+    end-to-end extraction slowdown even warm.
+
+    The result is bound behind the optimization barrier: callers
+    reference the domain many times (classification, dedup keys,
+    filters), and without the barrier CollapseProject/pushdown
+    re-inlines the whole tree per reference (measured 1,110 split()
+    copies in the extraction plan). Batch-only barrier.
 
     Reference semantics: publicsuffix.EffectiveTLDPlusOne
-    (wat.go:660-672); parity with the pure-Python spec is pinned by
-    tests/test_psl_full.py.
+    (wat.go:660-672); parity with the pure-Python spec
+    ``psl.etld_plus_one_py`` is pinned by tests/test_psl_full.py.
     """
     host = F.col(host_col)
     # Bind the label split ONCE behind the optimization barrier: the
@@ -223,9 +180,10 @@ def with_registrable_domain(
     # bound attribute, so the split appears once in the plan instead of
     # ~90× (CollapseProject re-inlines deterministic aliases into every
     # reference; measured the duplication doubles Janino compile time).
-    from globallinks_spark.functions.binding import bind_once
-    # dot-strip before split: parity with psl.etld_plus_one_py on hosts
-    # with leading/trailing dots (see _etld_expr_parts)
+    # Strip leading/trailing dots before splitting, as the spec does: a
+    # trailing dot ('example.com.') would add an empty label, every
+    # suffix probe would miss, and the result would be 'com.' instead of
+    # the spec's 'example.com'.
     df = df.withColumn(
         "__psl_labels",
         bind_once(
@@ -260,54 +218,12 @@ def with_registrable_domain(
             3: F.col("__psl_m3").isNotNull(),
         }
         _etld_marker_expr_cache[cache_key] = _etld_expr_parts(
-            host, big_markers=markers, labels=F.col("__psl_labels")
+            host, markers, labels
         )
-    out = _etld_marker_expr_cache[cache_key]
-    if bind:
-        # pipelines with many downstream consumers (classification,
-        # dedup keys, filters) must bind the domain behind the
-        # optimization barrier, or CollapseProject/pushdown re-inlines
-        # the whole tree per reference (measured 1,110 split() copies in
-        # the extraction plan without it). Batch-only barrier.
-        from globallinks_spark.functions.binding import bind_once
-        out = bind_once(out)
+    out = bind_once(_etld_marker_expr_cache[cache_key])
     return joined.withColumn(out_col, out).drop(
         "__psl_labels", "__psl_s2", "__psl_s3", "__psl_m2", "__psl_m3"
     )
-
-
-# ~9.5k-literal trees cost ~1 s of py4j round trips per build, so built
-# trees are memoized per *simple column name* (a Column is an immutable
-# expression tree; one tree can appear in any number of plans). Complex
-# inputs fall through to a fresh build — hot paths bind the host to an
-# attribute first (operators/extract.py does; see also q_url_parse).
-_etld_expr_cache: dict[str, Column] = {}
-_SIMPLE_COL_RE = re.compile(r"^Column<'([A-Za-z_][A-Za-z0-9_]*)'>$")
-
-
-def etld_plus_one(host: Column) -> Column:
-    """P3 as a pure Column expression over the FULL bundled PSL — same
-    semantics as ``etld_plus_one_udf``, evaluated inside whole-stage
-    codegen (no Python worker, no Arrow transfer).
-
-    Shape: one ``InSet`` hash-probe per distinct suffix length (exact
-    rules of length s merged with wildcard tails of length s-1, both
-    yielding suffix length s), combined longest-match-first via a
-    branch-free ``greatest``; the 8 exception rules override via an
-    arithmetic select (per the PSL spec they prevail over longer
-    matches). ~10 set probes per row total, each O(1): Catalyst converts
-    ``isin`` over >400 literals into a hash-set ``InSet``, so rule count
-    does not affect per-row cost, and the branch-free shape keeps every
-    subtree eligible for codegen subexpression elimination (the host is
-    split exactly once per row).
-    """
-    m = _SIMPLE_COL_RE.match(str(host))
-    if m is None:
-        return _build_etld_expr(host)
-    name = m.group(1)
-    if name not in _etld_expr_cache:
-        _etld_expr_cache[name] = _build_etld_expr(F.col(name))
-    return _etld_expr_cache[name]
 
 
 # ---------------------------------------------------------------------------

@@ -40,6 +40,9 @@ from globallinks_spark.operators.linkdb import LinkQuery
 RATE_LIMIT = 50                  # controller.go:283
 RATE_WINDOW_SEC = 15 * 60        # controller.go:284
 _HEALTH_BODY = b"I am alive!"    # healthcheck.go:18
+# a LinkQuery body is a few hundred bytes; anything past this is refused
+# (413) before a byte of it is read, so a request can't grow the heap
+MAX_BODY_BYTES = 64 << 10
 
 # Python re has no inline (?i) mid-pattern requirement; the Go pattern
 # carries a leading (?i) which Python only allows at the very start —
@@ -179,6 +182,13 @@ def make_handler(
                 return
             try:
                 length = int(self.headers.get("Content-Length", 0))
+                if length < 0:
+                    raise ValueError(f"negative Content-Length {length}")
+                if length > MAX_BODY_BYTES:
+                    self._send(413, api_error(
+                        "ErrorTooLarge", "HandlerGetDomainLinks",
+                        f"request body over {MAX_BODY_BYTES} bytes"))
+                    return
                 q = parse_api_request(self.rfile.read(length))
             except KeyError:
                 self._send(400, api_error(

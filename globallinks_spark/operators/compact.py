@@ -53,11 +53,6 @@ _LINE_ORDER = (
 )
 
 
-def segment_distinct(links: DataFrame) -> DataFrame:
-    """A4 — whole-row dedup across a segment's per-file link outputs."""
-    return links.distinct()
-
-
 def compact_links(links: DataFrame) -> DataFrame:
     """A5 — 14-col link rows → 16-col compacted rows.
 
@@ -154,8 +149,8 @@ def compact_segment(links: DataFrame) -> DataFrame:
     not: every A5 aggregate — min/max dates, min_by/max_by, countDistinct
     variants, min(no_follow) — is invariant under row duplication, so
     feeding raw (possibly duplicated) link rows produces byte-identical
-    compacted output while skipping an entire full-table shuffle.
-    ``segment_distinct`` remains available for emitting the reference's
-    intermediate sorted file (K1 byte-compat); the serving path doesn't
-    pay for it."""
+    compacted output while skipping an entire full-table shuffle. A
+    caller that needs the reference's intermediate sorted file (K1
+    byte-compat) applies ``.distinct()`` itself; the serving path
+    doesn't pay for it."""
     return compact_links(links)

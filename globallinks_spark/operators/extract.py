@@ -84,15 +84,13 @@ def pages_with_url_record(wat_pages: DataFrame) -> DataFrame:
         _bind(U.url_raw_query(uri)).alias("page_raw_query"),
         _robots_flag(F.col("metas"), "noindex").alias("no_index"),
         _robots_flag(F.col("metas"), "nofollow").alias("page_no_follow"),
-        F.to_date(F.col("warc_date")).alias("date_imported"),
+        F.try_to_date(F.col("warc_date")).alias("date_imported"),
         F.coalesce(F.col("warc_ip"), F.lit("")).alias("ip"),
     )
     # eTLD+1 over the bound host attribute via the broadcast suffix-table
     # join (full PSL; map-side, no shuffle — see with_registrable_domain);
     # bound so the F7 gate below references an attribute, not the tree
-    bound = U.with_registrable_domain(
-        bound, "page_host", "page_domain", bind=True
-    )
+    bound = U.with_registrable_domain(bound, "page_host", "page_domain")
     return bound.filter(
         P.path_ok(F.col("page_path"))
         & P.record_quality_ok(                           # F7
@@ -167,9 +165,7 @@ def explode_links(pages: DataFrame) -> DataFrame:
     # the dozens of downstream references (classification, dedup keys,
     # subdomain) see an attribute instead of re-inlining the tree. A null
     # host (relative href) misses both joins and null-guards through.
-    bound = U.with_registrable_domain(
-        bound_parts, "link_host", "link_domain", bind=True
-    )
+    bound = U.with_registrable_domain(bound_parts, "link_host", "link_domain")
 
     # classification references only attributes — a small tree that stays
     # in codegen even after the downstream filter inlines it once
@@ -209,35 +205,18 @@ A2_DEDUP_KEY = (
 )
 
 
-def link_rows(
-    classified: DataFrame, dedup_partitions: int | None = None,
-) -> DataFrame:
+def link_rows(classified: DataFrame) -> DataFrame:
     """The 14-column link frame (LINK_SCHEMA order), deduped on the
     reference's per-file key — link host+path+query × page host+path+query
     (A2, farmhash key at wat.go:365). dropDuplicates compiles to a
     partial-then-final aggregate around one shuffle, which is exactly the
     reference's per-file map + global sort -u staging (SURVEY §4 X1).
-
-    ``dedup_partitions`` — the big-map-task spill knob (r10 verdict #5):
-    when gzip inputs are few and huge (8 × 1.25M-page files at the 10M
-    probe rung; any skewed archive slice in production), the MAP-side
-    partial aggregate builds a per-task hash of ~every emitted link —
-    link keys are mostly unique, so the partial agg dedups almost
-    nothing while its state spills (~14 GB/side measured at the 10M
-    rung, EXTRACT_SCALING_10M.json). Setting ``dedup_partitions``
-    repartitions by the dedup key FIRST: the dedup aggregation then
-    runs entirely post-exchange (the agg's required distribution is
-    already satisfied, so no second shuffle), scan tasks carry zero agg
-    state, and per-reduce-task state shrinks with N. Size it so
-    rows/N × ~250 B stays well under executor memory per slot. The
-    default (None) keeps the partial-then-final plan — right whenever
-    input splits are already cluster-sized (~125k pages/file archive
-    layout), where per-task state is small and map-side collapse is
-    free.
+    The map-side partial aggregate stays small because archive inputs
+    are cluster-sized (~125k pages per unsplittable WAT file).
 
     The filter and subdomain derivation reference only named columns —
     nothing heavy re-inlines."""
-    out = (
+    return (
         classified.filter(F.col("link_class") == "emitted")
         .select(
             "link_domain",
@@ -248,10 +227,8 @@ def link_rows(
             U.scrub_delimiter(F.col("link_text")).alias("link_text"),
             "no_follow", "no_index", "date_imported", "ip",
         )
+        .dropDuplicates(list(A2_DEDUP_KEY))
     )
-    if dedup_partitions:
-        out = out.repartition(dedup_partitions, *A2_DEDUP_KEY)
-    return out.dropDuplicates(list(A2_DEDUP_KEY))
 
 
 def page_rows(classified: DataFrame) -> DataFrame:
@@ -288,83 +265,10 @@ def page_rows(classified: DataFrame) -> DataFrame:
     ).dropDuplicates(["host", "path", "raw_query"])
 
 
-# ----- auto-sizing for the dedup_partitions knob (r11 verdict #3) -----
-# The spill knob was proven in r10/r11 (reduce-agg spill -> 0 at the
-# 10M-page rung) but manual — a production run_import over fat gzip
-# inputs would still hit the measured ~14 GB/side spill unless the
-# operator remembered it. These constants derive it from input stats:
-#
-# AUTO_DEDUP_PAGES_PER_TASK — pages per gzip map task above which the
-#   map-side partial aggregate's state is worth eliminating. Measured
-#   anchors: 1.25M-page tasks spill ~1.9 GB/task of agg state (10M rung,
-#   EXTRACT_SCALING_10M.json); 125k-page tasks (the ~90k-file archive
-#   layout) carry ~190 MB and never spill. 300k pages/task (~450 MB
-#   state at ~12 links/page x ~250 B/key) stays under local-mode's
-#   ~300 MB-per-slot execution memory only with map-side collapse —
-#   above it, pre-exchanging is strictly better.
-# AUTO_DEDUP_TARGET_ROWS_PER_TASK — emitted links per post-exchange
-#   reduce task: 2M rows x ~250 B ≈ 500 MB of per-task agg state, well
-#   inside a cluster executor's multi-GB-per-core budget and safely
-#   spill-free at local-mode's grant too (state is spread over N tasks).
-# EST_LINKS_PER_PAGE — sizing estimate: the synthetic corpus measures 8
-#   EMITTED links/page (links_out/n_pages, bench_extract) out of 12 raw
-#   anchors; 12 is used as the upper bound — oversizing N by 1.5x costs
-#   a few empty tasks, undersizing risks the spill the knob exists to
-#   prevent.
-AUTO_DEDUP_PAGES_PER_TASK = 300_000
-AUTO_DEDUP_TARGET_ROWS_PER_TASK = 2_000_000
-EST_LINKS_PER_PAGE = 12
-
-
-def auto_dedup_partitions(
-    spark, wat_paths: str | list[str],
-    pages_per_task_threshold: int = AUTO_DEDUP_PAGES_PER_TASK,
-) -> int | None:
-    """Derive ``dedup_partitions`` from the input's ACTUAL shape
-    (r11 verdict #3): one decompress-only counting pre-pass — lines
-    starting with '{' per gzip file, no JSON parsing — yields the exact
-    per-map-task page count (gzip is unsplittable, one task per file).
-    Returns None (keep the partial-then-final plan) when every file is
-    under ``pages_per_task_threshold`` pages; otherwise the exchange
-    width ceil(total_pages x EST_LINKS_PER_PAGE /
-    AUTO_DEDUP_TARGET_ROWS_PER_TASK), floored at the session's default
-    parallelism so the reduce side never has fewer tasks than cores.
-
-    Why count instead of estimating from file bytes: gz bytes/page
-    varies ~80x between corpora (synthetic bench pages compress to
-    ~93 B; production WAT pages run ~8 KB), so any bytes-based
-    estimate is wrong by orders of magnitude for one of them. The
-    count pass is a single gzip decode at ~5-10% of the full extract's
-    cost (no JSON parse, no shuffle, no output), paid only once per
-    segment — and only its VERDICT is data-dependent; a wrong
-    links-per-page guess changes task COUNT, not correctness."""
-    import math
-
-    counts = (
-        spark.read.option("ignoreCorruptFiles", "true").text(wat_paths)
-        .where(F.col("value").startswith("{"))
-        .groupBy(F.input_file_name().alias("f"))
-        .count()
-        .agg(F.max("count").alias("mx"), F.sum("count").alias("total"))
-        .first()
-    )
-    if not counts or not counts.mx or counts.mx <= pages_per_task_threshold:
-        return None
-    n = math.ceil(
-        counts.total * EST_LINKS_PER_PAGE / AUTO_DEDUP_TARGET_ROWS_PER_TASK
-    )
-    return max(n, spark.sparkContext.defaultParallelism)
-
-
-def extract_links(
-    wat_pages: DataFrame, dedup_partitions: int | None = None,
-) -> DataFrame:
-    """End-to-end: WAT page frame → 14-column external link rows.
-    ``dedup_partitions`` — see :func:`link_rows` (big-map-task spill
-    knob; default None keeps the partial-then-final dedup plan)."""
+def extract_links(wat_pages: DataFrame) -> DataFrame:
+    """End-to-end: WAT page frame → 14-column external link rows."""
     return link_rows(
-        explode_links(content_quality_gate(pages_with_url_record(wat_pages))),
-        dedup_partitions=dedup_partitions,
+        explode_links(content_quality_gate(pages_with_url_record(wat_pages)))
     )
 
 

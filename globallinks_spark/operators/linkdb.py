@@ -30,6 +30,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from globallinks_spark.functions.psl import etld_plus_one_py
 from globallinks_spark.functions.urltools import reconstruct_url
 
 MAX_LIMIT = 100
@@ -62,17 +63,11 @@ class LinkQuery:
     # each filter: (name, value, kind) — kind ∈ {exact, any}
 
 
-def _etld1_local(domain: str) -> str | None:
-    from globallinks_spark.functions.urltools import _etld1_one
-
-    return _etld1_one(domain.lower())
-
-
 def domain_predicate(domain: str) -> Column:
     """Equality on link_domain, plus link_sub_domain when the queried name
     carries a subdomain (controller.go:132-138)."""
     domain = domain.lower()
-    parsed = _etld1_local(domain) or domain
+    parsed = etld_plus_one_py(domain) or domain
     if parsed != domain:
         sub = domain[: len(domain) - len(parsed) - 1]
         return (F.col("link_domain") == parsed) & (

@@ -414,11 +414,11 @@ def q_url_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
         U.url_raw_query(F.col("url")).alias("raw_query"),
     )
     # eTLD+1 via the production broadcast suffix-table join (full PSL).
-    # bind=True: sub_domain references `domain` 4× — without the barrier
-    # CollapseProject inlines the eTLD tree into every reference
-    # (measured: 91 split() copies in the optimized plan, ~10 s of
-    # codegen+JIT for a 15k-row input; 4 copies and <2 s with it).
-    parsed = U.with_registrable_domain(parsed, "host", "domain", bind=True)
+    # The result is bound: sub_domain references `domain` 4× — without
+    # the barrier CollapseProject inlines the eTLD tree into every
+    # reference (measured: 91 split() copies in the optimized plan,
+    # ~10 s of codegen+JIT for a 15k-row input; 4 copies and <2 s with it).
+    parsed = U.with_registrable_domain(parsed, "host", "domain")
     return parsed.select(
         "c_custkey", "scheme_code", "host", "path", "raw_query", "domain",
         U.subdomain(F.col("host"), F.col("domain")).alias("sub_domain"),

@@ -30,6 +30,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
+from globallinks_spark.functions.psl import etld_plus_one_py
 from globallinks_spark.operators import compact as C
 from globallinks_spark.operators import extract as X
 from globallinks_spark.operators.linkdb import LinkQuery, get_domain_links
@@ -47,28 +48,17 @@ def run_import(
     out_dir: str,
     segment: str,
     save_pages: bool = False,
-    dedup_partitions: int | str | None = "auto",
 ) -> None:
     """One segment: WAT files → 14-col link parquet (+ optional pages).
     One Spark task per WAT file (the reference's goroutine-per-file
-    parallelism, main.go:272-291, without the hand-rolled pool).
-
-    ``dedup_partitions="auto"`` (default, r11 verdict #3) sizes the A2
-    dedup spill knob from the input's actual shape via a decompress-only
-    counting pre-pass (see ``extract.auto_dedup_partitions``): archive
-    layouts (~125k pages/file) keep the partial-then-final plan, fat
-    gzip inputs (>300k pages in one unsplittable map task) pre-exchange
-    by the dedup key so scan tasks carry zero aggregation state — the
-    configuration that took the measured 10M-rung reduce-agg spill to
-    zero. Pass an int to pin the width, or None to force the default
-    plan (and skip the pre-pass)."""
+    parallelism, main.go:272-291, without the hand-rolled pool); the
+    extract is the only job before the write — A2 dedup always runs as
+    the partial-then-final aggregate (see ``extract.link_rows``)."""
     links_out = os.path.join(out_dir, "links", f"segment={segment}")
     if _done(links_out):
         return
-    if dedup_partitions == "auto":
-        dedup_partitions = X.auto_dedup_partitions(spark, wat_paths)
     pages = read_wat_pages(spark, wat_paths)
-    X.extract_links(pages, dedup_partitions=dedup_partitions) \
+    X.extract_links(pages) \
         .write.mode("overwrite").parquet(links_out)
     if save_pages:
         pages_out = os.path.join(out_dir, "pages", f"segment={segment}")
@@ -270,11 +260,10 @@ def query_links(
     """The POST /api/links surface (§3.3): partition-pruned scan →
     filter → merge → sort → paginate. The bucket layout comes from the
     table's own metadata — callers can't desync it."""
-    from globallinks_spark.functions.urltools import _etld1_one
-
     # prune on the registrable domain — the table is bucketed by eTLD+1;
     # a 'www.x.com' query must land in x.com's bucket (the sub_domain
     # equality is applied row-level by get_domain_links)
-    parsed = _etld1_one(request.domain.lower()) or request.domain.lower()
+    domain = request.domain.lower()
+    parsed = etld_plus_one_py(domain) or domain
     table = SV.read_serving_table(spark, serving_path, domain=parsed)
     return get_domain_links(table, request)

@@ -28,6 +28,8 @@ DEFAULT_BUCKETS = 256
 # from collapsing to one straggler directory.
 _TARGET_BUCKET_BYTES = 256 << 20
 _MIN_BUCKETS, _MAX_BUCKETS = 8, 4096
+# parallel write tasks per bucket directory (see write_serving_table)
+_WRITERS_PER_BUCKET = 4
 _BUCKET_COL = "domain_bucket"
 _META_FILE = "_serving_meta.json"
 _MANIFEST_DIR = "_manifest"
@@ -66,25 +68,25 @@ def domain_bucket(domain: F.Column, buckets: int = DEFAULT_BUCKETS) -> F.Column:
 
 def write_serving_table(
     df: DataFrame, path: str, buckets: int = DEFAULT_BUCKETS,
-    writers_per_bucket: int = 4,
 ) -> None:
     """Write compacted link rows partitioned by domain bucket. Rows are
     pre-shuffled on (bucket, salt) so each directory is written by up to
-    ``writers_per_bucket`` parallel tasks instead of exactly one — at the
+    ``_WRITERS_PER_BUCKET`` parallel tasks instead of exactly one — at the
     1024-bucket design point a bucket holds ~100 GB (SCALING.md), and a
     single-task-per-bucket write (round 1) made every bucket a 100 GB
     straggler, doubled when two bucket values hash-collide into one
     task. Salting by a row-content hash keeps the shuffle balanced while
-    still bounding files-per-directory at writers_per_bucket (no
+    still bounding files-per-directory at _WRITERS_PER_BUCKET (no
     many-small-files explosion of partitionBy on unsorted input)."""
     salt = F.pmod(
         F.xxhash64("link_sub_domain", "link_path", "page_host"),
-        F.lit(writers_per_bucket),
+        F.lit(_WRITERS_PER_BUCKET),
     )
     (
         df.withColumn(_BUCKET_COL, domain_bucket(F.col("link_domain"), buckets))
         .withColumn("_salt", salt)
-        .repartition(buckets * writers_per_bucket, _BUCKET_COL, F.col("_salt"))
+        .repartition(
+            buckets * _WRITERS_PER_BUCKET, _BUCKET_COL, F.col("_salt"))
         .drop("_salt")
         .write.mode("overwrite")
         .partitionBy(_BUCKET_COL)

@@ -95,9 +95,9 @@ def main() -> None:
 
         # PSL share: identical pipeline, eTLD+1 joins swapped for a
         # trivial last-two-labels stub (same row flow / column shape)
-        def _stub(df, host_col, out_col, bind=False):
+        def _stub(df, host_col, out_col):
             out = F.substring_index(F.col(host_col), ".", -2)
-            return df.withColumn(out_col, bind_once(out) if bind else out)
+            return df.withColumn(out_col, bind_once(out))
 
         with mock.patch.object(X.U, "with_registrable_domain", _stub):
             no_psl = _timeit(spark, X.extract_links(pages))

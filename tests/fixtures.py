@@ -97,12 +97,13 @@ WAT_RECORDS = [
 ]
 
 
-def write_wat_file(path: str) -> None:
-    """Write the fixture as a .gz of JSON lines interleaved with WARC
-    header noise (exercising the line-level pre-filter)."""
+def write_wat_file(path: str, records: list[dict] = WAT_RECORDS) -> None:
+    """Write ``records`` (default: the fixture) as a .gz of JSON lines
+    interleaved with WARC header noise (exercising the line-level
+    pre-filter)."""
     with gzip.open(path, "wt", encoding="utf-8") as f:
         f.write("WARC/1.0\n")
-        for rec in WAT_RECORDS:
+        for rec in records:
             f.write("WARC-Type: metadata\n")
             uri = rec["Envelope"]["WARC-Header-Metadata"]["WARC-Target-URI"]
             f.write(f"WARC-Target-URI: {uri}\n\n")

@@ -11,7 +11,6 @@ from pyspark.sql import functions as F
 from globallinks_spark.operators.compact import (
     compact_links,
     compact_segment,
-    segment_distinct,
 )
 from globallinks_spark.schemas import LINK_SCHEMA
 
@@ -90,7 +89,7 @@ class TestCompactionMerge:
             _row(page_path="/b", page_query=""),
             _row(page_path="/a", page_query="x=1"),
         ]
-        out = compact_links(segment_distinct(_df(spark, rows))).collect()
+        out = compact_links(_df(spark, rows).distinct()).collect()
         assert out[0].qty == 3
 
     def test_groups_not_merged_across_page_hosts(self, spark):

@@ -8,7 +8,7 @@ import pytest
 
 from globallinks_spark.operators import extract
 from globallinks_spark.sources.wat import read_wat_pages
-from tests.fixtures import write_wat_file
+from tests.fixtures import WAT_RECORDS, _envelope, a, write_wat_file
 
 
 @pytest.fixture(scope="module")
@@ -24,76 +24,6 @@ def _by_key(rows):
         (r.link_domain, r.link_sub_domain, r.link_path, r.page_host): r
         for r in rows
     }
-
-
-class TestDedupPartitionsKnob:
-    """r10 verdict #5: the big-map-task spill knob. dedup_partitions
-    repartitions by the A2 key before dropDuplicates — rows must be
-    identical to the default plan, and the dedup aggregation must reuse
-    the explicit exchange (exactly ONE Exchange in the plan, sized by
-    the knob) so scan tasks carry no aggregation state."""
-
-    def test_rows_identical_and_single_exchange(self, spark, tmp_path):
-        p = tmp_path / "knob-00000.warc.wat.gz"
-        write_wat_file(str(p))
-        pages = read_wat_pages(spark, str(p))
-        base = extract.extract_links(pages)
-        knob = extract.extract_links(pages, dedup_partitions=4)
-        # (exceptAll would be the idiomatic comparison, but its
-        # replicator rewrite trips a Catalyst pruning bug on the
-        # Repartition+Deduplicate plan — ATTRIBUTE_NOT_FOUND — so the
-        # 7-row goldens are compared driver-side)
-        assert sorted(map(tuple, base.collect())) == \
-            sorted(map(tuple, knob.collect()))
-        plan = knob._jdf.queryExecution().executedPlan().toString()
-        # the ONLY shuffle is the explicit repartition on the A2 key,
-        # sized by the knob; the dedup aggregate reuses it — no
-        # ENSURE_REQUIREMENTS exchange of its own. (The executed AQE
-        # plan prints final + initial sections, so the repartition line
-        # can appear twice; the other Exchanges are PSL broadcasts.)
-        shuffles = [ln for ln in plan.splitlines()
-                    if "Exchange hashpartitioning" in ln]
-        assert shuffles, "expected the explicit repartition exchange"
-        assert all("REPARTITION_BY_NUM" in ln and ", 4)" in ln
-                   for ln in shuffles), shuffles
-
-    def test_auto_sizing(self, spark, tmp_path):
-        """r11 verdict #3: the knob sizes itself from a decompress-only
-        counting pre-pass. Archive-shaped inputs (per-file pages under
-        the threshold) keep the default partial-then-final plan (None);
-        fat files engage the exchange, sized ceil(total x links/page /
-        target) and floored at the session's default parallelism."""
-        p = tmp_path / "auto-00000.warc.wat.gz"
-        write_wat_file(str(p))
-        # the fixture is tiny — far below the 300k pages/task threshold
-        assert extract.auto_dedup_partitions(spark, str(p)) is None
-        # force engagement: a tiny total still floors at parallelism
-        n = extract.auto_dedup_partitions(
-            spark, str(p), pages_per_task_threshold=0)
-        assert n == spark.sparkContext.defaultParallelism
-        # the sizing formula rules once totals dominate the floor:
-        # ceil(pages x EST_LINKS_PER_PAGE / TARGET) reduce tasks
-        assert extract.EST_LINKS_PER_PAGE == 12
-        assert extract.AUTO_DEDUP_TARGET_ROWS_PER_TASK == 2_000_000
-        assert extract.AUTO_DEDUP_PAGES_PER_TASK == 300_000
-
-    def test_run_import_auto_matches_default_plan(self, spark, tmp_path):
-        """run_import's default dedup_partitions='auto' must produce
-        byte-identical rows to the pinned default plan (the pre-pass
-        only picks a plan; it never changes results)."""
-        from globallinks_spark import runner
-
-        p = tmp_path / "imp-00000.warc.wat.gz"
-        write_wat_file(str(p))
-        runner.run_import(spark, [str(p)], str(tmp_path / "auto"), "s1")
-        runner.run_import(spark, [str(p)], str(tmp_path / "pinned"), "s1",
-                          dedup_partitions=4)
-        a = spark.read.parquet(
-            str(tmp_path / "auto" / "links" / "segment=s1"))
-        b = spark.read.parquet(
-            str(tmp_path / "pinned" / "links" / "segment=s1"))
-        assert sorted(map(tuple, a.collect())) == \
-            sorted(map(tuple, b.collect()))
 
 
 class TestGoldenExtraction:
@@ -243,3 +173,32 @@ class TestCorruptFiles:
             read_wat_pages(spark, [good, corrupt])
         ).count()
         assert total >= baseline  # good file fully processed, no crash
+
+
+class TestMalformedWarcDate:
+    def test_impossible_date_imports_as_null(self, spark, tmp_path):
+        """An impossible WARC-Date (Feb 30) must not fail the segment
+        under ANSI mode (the Spark 4 default): it imports like a missing
+        date, as a NULL date_imported, and every other record's link
+        rows come out unchanged."""
+        from pyspark.sql import functions as F
+
+        from globallinks_spark import runner
+
+        def imported(name, records):
+            wat = tmp_path / f"{name}-00000.warc.wat.gz"
+            write_wat_file(str(wat), records)
+            runner.run_import(spark, [str(wat)], str(tmp_path / name), "s1")
+            return spark.read.parquet(
+                str(tmp_path / name / "links" / "segment=s1"))
+
+        bad = _envelope("https://bad-date.example.net/p",
+                        "2024-02-30T00:00:00Z", "10.0.0.9",
+                        [a("https://bad-date-target.org/x")])
+        good = imported("good", WAT_RECORDS)
+        mixed = imported("mixed", WAT_RECORDS + [bad])
+        is_bad = F.col("link_domain") == "bad-date-target.org"
+        assert sorted(map(tuple, mixed.filter(~is_bad).collect())) == \
+            sorted(map(tuple, good.collect()))
+        assert [r.date_imported for r in mixed.filter(is_bad).collect()] \
+            == [None]

@@ -6,6 +6,7 @@ LinkOut/ApiError JSON tags)."""
 from __future__ import annotations
 
 import datetime
+import http.client
 import json
 import threading
 import urllib.error
@@ -14,6 +15,7 @@ import urllib.request
 import pytest
 
 from globallinks_spark.httpapi import (
+    MAX_BODY_BYTES,
     RateLimiter,
     is_valid_domain,
     make_server,
@@ -262,3 +264,35 @@ class TestMalformedFilters:
                 served, {"domain": "example.com", "filters": bad}
             )
             assert (status, doc["errorCode"]) == (400, "ErrorParsing"), bad
+
+
+class TestContentLength:
+    """The edge must not trust Content-Length: a negative value once
+    became ``rfile.read(-1)`` (blocks until the client hangs up) and a
+    huge one was read into memory unbounded. Both are refused before any
+    of the body is read — these requests send no body at all, so a
+    server that tried to read one would hit the client timeout."""
+
+    @staticmethod
+    def _post_declared(base: str, length: int) -> tuple[int, dict]:
+        host, port = base.removeprefix("http://").split(":")
+        conn = http.client.HTTPConnection(host, int(port), timeout=10)
+        try:
+            conn.putrequest("POST", "/api/links")
+            conn.putheader("Content-Type", "application/json")
+            conn.putheader("Content-Length", str(length))
+            conn.endheaders()
+            r = conn.getresponse()
+            return r.status, json.loads(r.read())
+        finally:
+            conn.close()
+
+    def test_negative_length_is_400(self, served):
+        status, doc = self._post_declared(served, -1)
+        assert (status, doc["errorCode"]) == (400, "ErrorParsing")
+
+    def test_oversized_length_is_413(self, served):
+        status, doc = self._post_declared(served, MAX_BODY_BYTES + 1)
+        assert (status, doc["errorCode"]) == (413, "ErrorTooLarge")
+        status, doc = self._post_declared(served, 1 << 40)
+        assert status == 413

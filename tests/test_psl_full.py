@@ -1,5 +1,5 @@
-"""Full-PSL parity: the JVM ``etld_plus_one`` Column expression vs the
-pure-Python spec (functions/psl.py) over a corpus derived from the
+"""Full-PSL parity: the Spark eTLD+1 form (``with_registrable_domain``)
+vs the pure-Python spec (functions/psl.py) over a corpus derived from the
 bundled snapshot itself — every wildcard and exception rule plus a
 deterministic sample of exact rules, each expanded into hosts at several
 subdomain depths. The reference resolves these via the complete Mozilla
@@ -12,7 +12,6 @@ from __future__ import annotations
 import random
 
 import pytest
-from pyspark.sql import functions as F
 
 from globallinks_spark.functions import psl
 from globallinks_spark.functions import urltools as U
@@ -87,29 +86,18 @@ def _corpus() -> list[str]:
 
 
 class TestJvmExpressionParity:
-    def test_jvm_matches_python_spec_on_rule_corpus(self, spark):
-        hosts = _corpus()
-        got = dict(
-            spark.createDataFrame([(h,) for h in hosts], "host string")
-            .select("host", U.etld_plus_one(F.col("host")).alias("d"))
-            .collect()
-        )
-        bad = [
-            (h, psl.etld_plus_one_py(h), got[h])
-            for h in set(hosts)
-            if got[h] != psl.etld_plus_one_py(h)
-        ]
-        assert bad == []
-
     def test_broadcast_join_path_matches_python_spec(self, spark):
         # the production hot path (operators/extract.py) resolves eTLD+1
-        # via with_registrable_domain; must agree with the spec exactly
-        hosts = _corpus()
+        # via with_registrable_domain; must agree with the spec exactly.
+        # NULL and empty hosts ride along: relative hrefs reach the
+        # kernel as NULL hosts, and both must come out NULL.
+        hosts = _corpus() + [None, ""]
         df = spark.createDataFrame([(h,) for h in hosts], "host string")
         got = dict(
             U.with_registrable_domain(df, "host", "d")
             .select("host", "d").collect()
         )
+        assert got[None] is None and got[""] is None
         bad = [
             (h, psl.etld_plus_one_py(h), got[h])
             for h in set(hosts)
@@ -126,22 +114,11 @@ class TestJvmExpressionParity:
         assert plan.count("BroadcastHashJoin") == 2
         assert "Exchange hashpartitioning" not in plan
 
-    def test_pandas_udf_matches_jvm(self, spark):
-        hosts = _corpus()[:400]
-        df = spark.createDataFrame([(h,) for h in hosts], "host string")
-        rows = df.select(
-            "host",
-            U.etld_plus_one(F.col("host")).alias("jvm"),
-            U.etld_plus_one_udf(F.col("host")).alias("udf"),
-        ).collect()
-        bad = [r for r in rows if r["jvm"] != r["udf"]]
-        assert bad == []
-
 
 class TestDottedHosts:
-    """Leading/trailing dots: the Python spec strips them; the JVM
-    expression and broadcast-join path must agree (round-2 review found
-    the unstripped split emitting 'com.' for 'example.com.')."""
+    """Leading/trailing dots: the Python spec strips them; the
+    broadcast-join path must agree (round-2 review found the unstripped
+    split emitting 'com.' for 'example.com.')."""
 
     CASES = [
         "example.com.", ".example.com", "www.example.co.uk.",
@@ -156,22 +133,6 @@ class TestDottedHosts:
         got = {
             r["host"]: r["d"]
             for r in U.with_registrable_domain(df, "host", "d").collect()
-        }
-        for h in self.CASES:
-            assert got[h] == psl.etld_plus_one_py(h), h
-
-    def test_inline_expression_strips_dots(self, spark):
-        from pyspark.sql import functions as F
-
-        from globallinks_spark.functions import psl
-        from globallinks_spark.functions import urltools as U
-
-        df = spark.createDataFrame([(h,) for h in self.CASES], "host string")
-        got = {
-            r["host"]: r["d"]
-            for r in df.select(
-                "host", U.etld_plus_one(F.col("host")).alias("d")
-            ).collect()
         }
         for h in self.CASES:
             assert got[h] == psl.etld_plus_one_py(h), h

@@ -9,7 +9,7 @@ import string
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from globallinks_spark.functions.urltools import _etld1_one, _psl_suffix_len
+from globallinks_spark.functions.psl import etld_plus_one_py, suffix_len
 
 label = st.text(
     alphabet=string.ascii_lowercase + string.digits, min_size=1, max_size=8
@@ -21,7 +21,7 @@ class TestEtld1Properties:
     @given(host)
     @settings(max_examples=300, deadline=None)
     def test_result_is_dot_suffix_of_host(self, h):
-        d = _etld1_one(h)
+        d = etld_plus_one_py(h)
         if d is not None:
             assert h == d or h.endswith("." + d)
             assert "." in d
@@ -29,27 +29,27 @@ class TestEtld1Properties:
     @given(host)
     @settings(max_examples=300, deadline=None)
     def test_idempotent(self, h):
-        d = _etld1_one(h)
+        d = etld_plus_one_py(h)
         if d is not None:
-            assert _etld1_one(d) == d
+            assert etld_plus_one_py(d) == d
 
     @given(host)
     @settings(max_examples=300, deadline=None)
     def test_suffix_len_bounded(self, h):
         labels = h.split(".")
-        k = _psl_suffix_len(labels)
+        k = suffix_len(labels)
         assert 1 <= k <= len(labels)
 
     @given(label)
     @settings(max_examples=100, deadline=None)
     def test_single_label_has_no_registrable_domain(self, l):
-        assert _etld1_one(l) is None
+        assert etld_plus_one_py(l) is None
 
     @given(host)
     @settings(max_examples=200, deadline=None)
     def test_prepending_label_preserves_domain(self, h):
         """Adding a subdomain label never changes the registrable
         domain."""
-        d = _etld1_one(h)
+        d = etld_plus_one_py(h)
         if d is not None:
-            assert _etld1_one("extra." + h) == d
+            assert etld_plus_one_py("extra." + h) == d

@@ -213,7 +213,7 @@ class TestPipeline:
             "date_imported", "ip",
         ])
         path = str(tmp_path / "srv")
-        write_serving_table(df, path, buckets=2, writers_per_bucket=4)
+        write_serving_table(df, path, buckets=2)
         # every row lands in ONE bucket dir (single domain); that dir
         # must contain several part files — one per salted writer task
         dirs = glob.glob(os.path.join(path, "domain_bucket=*"))

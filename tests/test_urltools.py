@@ -6,7 +6,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from globallinks_spark.functions import urltools as U
-from globallinks_spark.functions.urltools import _etld1_one
+from globallinks_spark.functions.psl import etld_plus_one_py
 
 
 def _one(spark, expr, url):
@@ -73,29 +73,29 @@ class TestUrlParts:
 class TestEtld1:
     # EffectiveTLDPlusOne parity on the shapes the pipeline meets
     def test_plain(self):
-        assert _etld1_one("www.example.com") == "example.com"
+        assert etld_plus_one_py("www.example.com") == "example.com"
 
     def test_bare(self):
-        assert _etld1_one("example.com") == "example.com"
+        assert etld_plus_one_py("example.com") == "example.com"
 
     def test_multilevel_suffix(self):
-        assert _etld1_one("news.bbc.co.uk") == "bbc.co.uk"
+        assert etld_plus_one_py("news.bbc.co.uk") == "bbc.co.uk"
 
     def test_private_suffix(self):
-        assert _etld1_one("myblog.blogspot.com") == "myblog.blogspot.com"
+        assert etld_plus_one_py("myblog.blogspot.com") == "myblog.blogspot.com"
 
     def test_unknown_tld_fallback(self):
-        assert _etld1_one("host.example.zz") == "example.zz"
+        assert etld_plus_one_py("host.example.zz") == "example.zz"
 
     def test_bare_suffix_is_none(self):
-        assert _etld1_one("co.uk") is None
-        assert _etld1_one("com") is None
+        assert etld_plus_one_py("co.uk") is None
+        assert etld_plus_one_py("com") is None
 
     def test_wildcard_rule(self):
-        assert _etld1_one("a.b.mm") == "a.b.mm"  # *.mm
+        assert etld_plus_one_py("a.b.mm") == "a.b.mm"  # *.mm
 
     def test_exception_rule(self):
-        assert _etld1_one("www.ck") == "www.ck"  # !www.ck under *.ck
+        assert etld_plus_one_py("www.ck") == "www.ck"  # !www.ck under *.ck
 
 
 class TestSubdomain:
