@@ -54,115 +54,6 @@ def _page(i: int) -> dict:
     }
 
 
-IO_PROBE_ROWS = 8_000_000
-IO_PROBE_DIR = os.path.join(tempfile.gettempdir(), "sparklinks_io_probe")
-_io_probe_warm = False
-
-
-def parquet_io_probe(spark) -> float:
-    """One fixed-size parquet scan+write round trip (min-of-2) — the
-    I/O-shaped host-window probe (r10 verdict #2). The strhash probe is
-    pure CPU and measured BLIND to I/O/scheduler windows: Pearson r
-    0.18 against extract noise in r8, and quiet during 4 of the 5
-    entry slowdowns it was asked to adjudicate in r10
-    (BENCH_R10_WINDOWS.json). This probe pays the same cost classes as
-    the bench workload itself — parquet decode+encode, filesystem
-    read/write, allocation — over a deterministic 8M-row/~278 MB
-    source (range + sha2, byte-identical across builds, cached under
-    /tmp with a _COMPLETE marker).
-
-    min-of-3 (r11 verdict #5 — was min-of-2): a window must persist
-    across all passes to move the figure, the same persistence needed
-    to move an entry's min-of-2/3 samples. Single passes measured a
-    1.46x quiet-host spread — wider than the 1.3x regression wire —
-    quiet min-of-2 spread to ~1.25x of the pin, leaving a blind band
-    under the 1.5x window threshold; min-of-3 tightens the quiet
-    spread (r12 recalibration trials in bench.PIN_PROVENANCE), so a
-    reading near the 1.5x band is evidence, not sampling noise. The
-    pinned quiet figure is bench.PINNED_IO_PROBE_SEC."""
-    global _io_probe_warm
-    src = os.path.join(IO_PROBE_DIR, "src.parquet")
-    marker = os.path.join(IO_PROBE_DIR, "_COMPLETE")
-    if not os.path.exists(marker):
-        spark.range(IO_PROBE_ROWS, numPartitions=8).selectExpr(
-            "id", "sha2(cast(id as string), 256) as s", "id % 1000 as k"
-        ).write.mode("overwrite").parquet(src)
-        open(marker, "w").close()
-    dst = os.path.join(IO_PROBE_DIR, "dst.parquet")
-
-    def one() -> float:
-        t0 = time.perf_counter()
-        spark.read.parquet(src).write.mode("overwrite").parquet(dst)
-        return time.perf_counter() - t0
-
-    if not _io_probe_warm:
-        one()  # codegen warm, once per process
-        _io_probe_warm = True
-    return round(min(one(), one(), one()), 3)
-
-
-def host_calibration(spark) -> dict:
-    """Single-core JVM arithmetic probe: sum(id*id) over a one-partition
-    range — whole-stage-codegen'd, allocation-free, cache-insensitive.
-    Rounds 3-6 saw identical code swing ~3× across driver-provisioned
-    hosts (r5: 303k pages/min/core standalone; r6 host: ~110k on an
-    idle machine, steal≈0) — without a host-speed index in the artifact
-    every cross-round comparison conflates host and code. min-of-3;
-    the CPU model string rides along for provenance."""
-    import time as _time
-
-    # string-cast + xxhash64: allocation- and branch-heavy JVM work, the
-    # same regime as the extract kernel (JSON fields, URL strings) — a
-    # pure-arithmetic loop is useless here because HotSpot vectorizes it
-    # (measured 1.6B mul/mod/sum rows in 0.15 s) and then the index
-    # tracks the host's SIMD width, not its scalar/memory speed.
-    # bit_xor keeps the aggregate overflow-free in ANSI mode.
-    def _probe(n_rows: int, parts: int) -> float:
-        def build():
-            # a FRESH DataFrame per timed run: re-collecting the same
-            # instance reuses its materialized AQE shuffle stage, so the
-            # partial-agg (= all the work) would be measured once and
-            # then skipped (observed: 4.6 s cold, 0.06 s "warm")
-            return spark.range(n_rows, numPartitions=parts).selectExpr(
-                "bit_xor(xxhash64(cast(id as string))) as s"
-            )
-
-        build().collect()  # codegen warm
-        best = float("inf")
-        for _ in range(3):
-            t0 = _time.perf_counter()
-            build().collect()
-            best = min(best, _time.perf_counter() - t0)
-        return best
-
-    best = _probe(20_000_000, 1)
-    # 8-way variant (same per-core work × 8): a host that throttles
-    # under parallel load shows the 8-core probe off the 1-core pace
-    best8 = _probe(160_000_000, 8)
-    model = ""
-    try:
-        with open("/proc/cpuinfo") as fh:
-            for line in fh:
-                if line.startswith("model name"):
-                    model = line.split(":", 1)[1].strip()
-                    break
-    except OSError:
-        pass
-    # r10 verdict #2: the I/O-shaped probe rides next to the CPU one in
-    # every host stamp, so fresh-JVM extract samples carry BOTH figures
-    # and bench.py can correlate each against the run's extract time.
-    try:
-        io_sec = parquet_io_probe(spark)
-    except Exception:
-        io_sec = None
-    return {
-        "jvm_1core_20M_strhash_sec": round(best, 3),
-        "jvm_8core_160M_strhash_sec": round(best8, 3),
-        "parquet_io_probe_sec": io_sec,
-        "cpu_model": model,
-    }
-
-
 def _write_corpus_file(args: tuple[str, int, int]) -> None:
     path, lo, hi = args
     with gzip.open(path, "wt", encoding="utf-8") as out:
@@ -202,8 +93,8 @@ def ensure_corpus(n_pages: int, n_files: int, work: str) -> list[str]:
 
 def measure_extract(spark, n_pages: int, cores: int) -> dict:
     """Generate a synthetic WAT corpus, run extract (+compact), return
-    the measurement dict. ``spark`` is reused (bench.py passes its own
-    session); ``cores`` only scales the pages/min/core normalization.
+    the measurement dict. ``spark`` is the caller's session (profile_extract.py
+    passes its own); ``cores`` only scales the pages/min/core normalization.
 
     Warmup: three throwaway passes. The first triggers Janino codegen
     and queues HotSpot C2 compilation of the big generated methods; the
@@ -241,10 +132,9 @@ def measure_extract(spark, n_pages: int, cores: int) -> dict:
 
         # min-of-2 timed passes, same policy as bench.py's query loop:
         # the first timed pass in a fresh JVM can still carry tail-end
-        # C2 compilation, and when bench.py calls this after its 70+
-        # query runs the old-gen is full of dead broadcast/cache blocks
-        # whose collection lands on whichever pass runs first. A GC
-        # hint before timing plus taking the minimum isolates the
+        # C2 compilation, and the warmup passes leave dead blocks whose
+        # collection lands on whichever pass runs first. A GC hint
+        # before timing plus taking the minimum isolates the
         # sustained-regime number both claims cite.
         spark.sparkContext._jvm.System.gc()
         t_extract, n_links = float("inf"), 0
@@ -281,7 +171,6 @@ def measure_extract(spark, n_pages: int, cores: int) -> dict:
         pages_min_core = n_pages / (t_extract / 60) / cores
         return {
             "metric": "extract_pages_per_min_per_core",
-            "host": host_calibration(spark),
             "value": round(pages_min_core),
             "unit": "pages/min/core",
             "n_pages": n_pages,

@@ -29,8 +29,10 @@ from __future__ import annotations
 import http.server
 import json
 import re
+import sys
 import threading
 import time
+import traceback
 import urllib.parse
 from collections.abc import Callable
 
@@ -80,11 +82,21 @@ class RateLimiter:
         self.window_sec = window_sec
         self.clock = clock
         self._records: dict[str, tuple[float, int]] = {}
+        self._swept = float("-inf")
         self._lock = threading.Lock()
 
     def is_limited(self, identifier: str) -> bool:
         now = self.clock()
         with self._lock:
+            # an expired entry only ever gets reset, so dropping them
+            # once per window bounds the map by the clients of the last
+            # two windows instead of every client ever seen
+            if now - self._swept > self.window_sec:
+                self._records = {
+                    k: r for k, r in self._records.items()
+                    if now - r[0] <= self.window_sec
+                }
+                self._swept = now
             rec = self._records.get(identifier)
             if rec is None or now - rec[0] > self.window_sec:
                 self._records[identifier] = (now, 1)
@@ -208,6 +220,11 @@ def make_handler(
             try:
                 rows = query_fn(q)
             except Exception:  # controller failure → 500, handler.go:60-63
+                # log_message is silenced, so this is the failure's only
+                # trace
+                print(f"POST /api/links {q.domain!r} failed:",
+                      file=sys.stderr)
+                traceback.print_exc()
                 self._send(500, api_error(
                     "ErrorFailedLinks", "HandlerGetDomainLinks",
                     "Error getting links"))

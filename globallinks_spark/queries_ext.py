@@ -1450,10 +1450,12 @@ _QUANTILES_PS = [("p25", 0.25), ("p50", 0.5), ("p75", 0.75), ("p99", 0.99)]
 
 
 def _quantiles_window_form(li: DataFrame) -> DataFrame:
-    """The bounded-memory exact form (see block comment above)."""
-    li = li.filter(F.col("l_extendedprice").isNotNull())
+    """The bounded-memory exact form (see block comment above). NULL
+    values are counted as 0, so they match no rank and an all-NULL
+    group keeps its row with n = 0 and NULL quantiles, as in
+    percentile()."""
     vc = li.groupBy("l_returnflag", "l_extendedprice").agg(
-        F.count(F.lit(1)).alias("c")
+        F.count("l_extendedprice").alias("c")
     )
     wcum = (
         Window.partitionBy("l_returnflag").orderBy("l_extendedprice")
@@ -1498,6 +1500,11 @@ def q_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     if (_input_bytes(f"{sf_dir}/lineitem.parquet")
             > QUANTILES_EXACT_BUFFER_MAX_BYTES):
         return _quantiles_window_form(li)
+    return _quantiles_percentile_form(li)
+
+
+def _quantiles_percentile_form(li: DataFrame) -> DataFrame:
+    """The single-exchange form for inputs under the size guard."""
     # ONE percentile aggregate over an array of percentages per group —
     # four scalar percentile() instances would each buffer the group's
     # whole value multiset (the approx_quantiles_bound lesson; 4× the

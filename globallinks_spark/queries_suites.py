@@ -491,8 +491,9 @@ FROM ({base["cube_revenue"].oracle}) __c
 def suite_members() -> dict[str, list[str]]:
     """driver-entry → FULL_REGISTRY member names for every folded
     entry (checksum suites, long-form unions, tagged unions, wide
-    joins). Used by bench.py's member-detail mode so suite timings
-    stay attributable to individual operators."""
+    joins). bench.py times each member when
+    SPARK_GRAFT_MEMBER_DETAIL=1 (sidecar ``suite_members_sec``), so
+    suite timings stay attributable to individual operators."""
     out: dict[str, list[str]] = {
         name: [tag for tag, _ in members]
         for name, members in CHECKSUM_SUITES.items()

@@ -108,7 +108,7 @@ def main() -> None:
             "n_pages": n_pages,
             "cores": cores,
             **{k: headline[k] for k in (
-                "host", "value", "extract_sec", "materialize_sec",
+                "value", "extract_sec", "materialize_sec",
                 "materialized_pages_per_min_per_core", "compact_sec",
             )},
             "stages_materialized": stages,
@@ -118,14 +118,11 @@ def main() -> None:
                 "r05_driver_in_bench": 144996,
                 "r05_builder_standalone": 303783,
             },
-            "note": "host-speed calibration rides along (.host: 1-core "
-                    "and 8-core string-hash probes + CPU model) — "
-                    "identical code measured 303k (r5 host) vs ~110k "
-                    "(r6 host, idle, steal~0), so cross-round deltas "
-                    "must be read against the calibration, not the raw "
-                    "value; stage split shows where materialized time "
-                    "goes (JSON parse, URL kernel, PSL joins, A2 dedup "
-                    "shuffle).",
+            "note": "identical code measured 303k (r5 host) vs ~110k "
+                    "(r6 host, idle, steal~0), so compare figures only "
+                    "within one session on one host; stage split shows "
+                    "where materialized time goes (JSON parse, URL "
+                    "kernel, PSL joins, A2 dedup shuffle).",
         }
         with open(out_json, "w", encoding="utf-8") as fh:
             json.dump(result, fh, indent=1)

@@ -38,6 +38,15 @@ class TestRateLimiter:
         t[0] = 901.0                               # window elapsed → reset
         assert rl.is_limited("a") is False
 
+    def test_expired_entries_are_evicted(self):
+        t = [0.0]
+        rl = RateLimiter(window_sec=900, clock=lambda: t[0])
+        for i in range(1000):
+            rl.is_limited(f"10.0.{i // 250}.{i % 250}")
+        t[0] = 901.0                               # every window expired
+        assert rl.is_limited("late") is False
+        assert len(rl._records) == 1
+
     def test_fifty_per_fifteen_minutes_defaults(self):
         t = [0.0]
         rl = RateLimiter(clock=lambda: t[0])       # reference defaults
@@ -186,6 +195,33 @@ class TestEndToEnd:
             assert (status, doc["errorCode"]) == (429, "ErrorTooManyRequests")
         finally:
             srv.shutdown()
+
+
+class TestQueryFailure:
+    def test_failure_is_500_and_logged(self, capsys):
+        """A failing query answers the reference's 500 body, and its
+        exception reaches stderr (request logging is silenced)."""
+        def failing(q):
+            raise RuntimeError("serving table unreadable")
+
+        srv = make_server(failing, host="127.0.0.1", port=0,
+                          limiter=RateLimiter(limit=1000))
+        threading.Thread(target=srv.serve_forever, daemon=True).start()
+        try:
+            status, doc, _ = _post(
+                f"http://127.0.0.1:{srv.server_address[1]}",
+                {"domain": "example.com"},
+            )
+        finally:
+            srv.shutdown()
+        assert (status, doc) == (500, {
+            "errorCode": "ErrorFailedLinks",
+            "function": "HandlerGetDomainLinks",
+            "error": "Error getting links",
+        })
+        err = capsys.readouterr().err
+        assert "RuntimeError: serving table unreadable" in err
+        assert "example.com" in err
 
 
 class TestTLS:

@@ -453,6 +453,17 @@ class TestR13OptimizationShapes:
         a = sorted(map(tuple, window_form.collect()))
         b = sorted(map(tuple, exact.collect()))
         assert a == b, "guard paths disagree"
+        # NULL values, a single-row group and an all-NULL group, which
+        # percentile() keeps with NULL quantiles
+        edge = spark_noaqe.createDataFrame(
+            [("A", 1.0), ("A", 2.0), ("A", None), ("A", 5.0),
+             ("B", 3.0), ("N", None), ("N", None)],
+            "l_returnflag string, l_extendedprice double",
+        )
+        a = sorted(map(tuple, QX._quantiles_window_form(edge).collect()))
+        b = sorted(map(tuple, QX._quantiles_percentile_form(edge).collect()))
+        assert a == b, "guard paths disagree on NULL edge rows"
+        assert ("N", None, None, None, None) in a
 
 
 class TestAudit:
