@@ -62,39 +62,33 @@ def _write_corpus_file(args: tuple[str, int, int]) -> None:
             out.write(json.dumps(_page(i)) + "\n")
 
 
-def ensure_corpus(n_pages: int, n_files: int, work: str) -> list[str]:
-    """Deterministic synthetic WAT corpus under ``work`` (generated once,
-    _COMPLETE-marked — identical bytes across builds since _page() is
-    pure); returns the sorted gzip paths. Shared by measure_extract and
-    the attribution probes so they read the very same corpus. Files are
-    independent page ranges, so generation (untimed, pure-Python, and
-    minutes-long at the 10M-page rungs) runs in a process pool."""
+def write_corpus(n_pages: int, n_files: int, work: str) -> list[str]:
+    """Deterministic synthetic WAT corpus of ``n_files`` gzip files under
+    ``work``; returns their sorted paths. Files are independent page
+    ranges, so generation (untimed, pure Python) runs in a process pool."""
     per_file = n_pages // n_files
-    if not os.path.exists(os.path.join(work, "_COMPLETE")):
-        os.makedirs(work, exist_ok=True)
-        jobs = [
-            (os.path.join(work, f"bench-{f:05d}.warc.wat.gz"),
-             f * per_file, (f + 1) * per_file)
-            for f in range(n_files)
-        ]
-        if len(jobs) > 1:
-            from concurrent.futures import ProcessPoolExecutor
+    jobs = [
+        (os.path.join(work, f"bench-{f:05d}.warc.wat.gz"),
+         f * per_file, (f + 1) * per_file)
+        for f in range(n_files)
+    ]
+    if len(jobs) > 1:
+        from concurrent.futures import ProcessPoolExecutor
 
-            with ProcessPoolExecutor(
-                max_workers=min(len(jobs), os.cpu_count() or 8)
-            ) as pool:
-                list(pool.map(_write_corpus_file, jobs))
-        else:
-            _write_corpus_file(jobs[0])
-        open(os.path.join(work, "_COMPLETE"), "w").close()
-    return [os.path.join(work, p) for p in sorted(os.listdir(work))
-            if p.endswith(".gz")]
+        with ProcessPoolExecutor(
+            max_workers=min(len(jobs), os.cpu_count() or 8)
+        ) as pool:
+            list(pool.map(_write_corpus_file, jobs))
+    else:
+        _write_corpus_file(jobs[0])
+    return [job[0] for job in jobs]
 
 
 def measure_extract(spark, n_pages: int, cores: int) -> dict:
     """Generate a synthetic WAT corpus, run extract (+compact), return
     the measurement dict. ``spark`` is the caller's session (profile_extract.py
-    passes its own); ``cores`` only scales the pages/min/core normalization.
+    passes its own); ``cores`` sets the file count (one gzip file per
+    core, written to a tempdir) and scales the pages/min/core figure.
 
     Warmup: three throwaway passes. The first triggers Janino codegen
     and queues HotSpot C2 compilation of the big generated methods; the
@@ -103,26 +97,9 @@ def measure_extract(spark, n_pages: int, cores: int) -> dict:
     a 90k-file archive import that runs for hours (the reference's
     ~30 s/WAT baseline is equally sustained-regime,
     cmd/importer/main.go:332 logs per-file times mid-run)."""
-    # WATBENCH_CACHE_DIR: reuse the generated corpus across subprocess
-    # runs (generation is single-threaded Python and NOT part of any
-    # timed window — at the 10M-page scaling rung it costs minutes per
-    # run for identical bytes; the deterministic _page() content makes
-    # the cache exact). Unset → the original per-run tempdir.
-    cache_root = os.environ.get("WATBENCH_CACHE_DIR")
-    # WATBENCH_N_FILES: override the one-file-per-core default — the
-    # cluster-split rung (r11 verdict #3) reads 10M pages as 64 gzip
-    # files (~156k pages/task, the archive-layout shape) instead of 8
-    # fat ones, so the A2 dedup's per-map-task agg state matches what a
-    # real segment import carries.
-    n_files = int(os.environ.get("WATBENCH_N_FILES", "0")) or max(cores, 1)
-    if cache_root:
-        work = os.path.join(cache_root, f"n{n_pages}_f{n_files}")
-        cleanup = False
-    else:
-        work = tempfile.mkdtemp(prefix="watbench-")
-        cleanup = True
+    work = tempfile.mkdtemp(prefix="watbench-")
     try:
-        paths = ensure_corpus(n_pages, n_files, work)
+        paths = write_corpus(n_pages, max(cores, 1), work)
         links = extract_links(read_wat_pages(spark, paths))
         for _ in range(3):
             links.count()
@@ -186,8 +163,7 @@ def measure_extract(spark, n_pages: int, cores: int) -> dict:
             "reference_baseline": "300000 pages/min/thread (README.md:8)",
         }
     finally:
-        if cleanup:
-            shutil.rmtree(work, ignore_errors=True)
+        shutil.rmtree(work, ignore_errors=True)
 
 
 def main() -> None:

@@ -80,15 +80,6 @@ def record_quality_ok(domain: Column, host: Column, raw_query: Column) -> Column
     )
 
 
-# F1 — source URL sanity (wat.go:302-317, 624-639)
-def source_url_ok(url: Column) -> Column:
-    return (
-        url.isNotNull()
-        & (url.startswith("http") | url.startswith("//"))
-        & ~url.contains("\n")
-    )
-
-
 def path_ok(path: Column) -> Column:
     """Path free of delimiter/newline (buildURLRecord, wat.go:637-639)."""
     return ~path.contains("|") & ~path.contains("\n")
@@ -104,21 +95,14 @@ def is_absolute(href: Column) -> Column:
     return href.startswith("http") | href.startswith("//")
 
 
-# F5/F6 — cross-host & cross-domain (kept = external link)
-def is_cross_host(link_host: Column, page_host: Column) -> Column:
-    return link_host != page_host
-
-
-def is_cross_domain(link_domain: Column, page_domain: Column) -> Column:
-    return link_domain != page_domain
-
-
 # F13 — page-level noindex (verifyContentQuality, wat.go:736-755)
 def page_indexable(no_index: Column) -> Column:
     return no_index == 0
 
 
 # F15 — malformed pipe row (split count gate) is applied in sources.pipe_text
+# F1 (source URL sanity) and F5/F6 (same host / same registrable domain)
+# are applied inline by operators/extract.py
 
 
 def canonical_ok(

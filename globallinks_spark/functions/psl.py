@@ -1,9 +1,9 @@
-"""Public-suffix list: loader, pure-Python evaluator, and the factored
-rule tables behind the JVM eTLD+1 expression (P3).
+"""Public-suffix list: loader, the eTLD+1 algorithm, and the factored
+rule tables it reads (P3).
 
 The reference resolves registrable domains with the full Mozilla PSL via
-``golang.org/x/net/publicsuffix`` (/root/reference/pkg/commoncrawl/
-wat.go:660-672). This module loads the same list from a bundled snapshot
+``golang.org/x/net/publicsuffix`` (wat.go:660-672). This module loads
+the same list from a bundled snapshot
 (``globallinks_spark/data/public_suffix_list.dat``, the publicsuffix.org
 file as shipped by Debian's ``publicsuffix`` package, MPL-2.0) and
 factors it three ways:
@@ -11,12 +11,14 @@ factors it three ways:
 - ``RULES`` — the raw rule set (exact + ``*.`` wildcard + ``!``
   exception entries), augmented with IDNA/punycode variants of the 466
   unicode rules so both unicode and xn-- hosts resolve;
-- ``suffix_len(labels)`` — the PSL algorithm in Python, used by the
-  pandas-UDF fallback path and by tests as the executable spec;
+- ``suffix_len(labels)`` — the PSL algorithm, behind
+  ``etld_plus_one_py``: the only eTLD+1 implementation. Spark runs it
+  once per distinct host of each Arrow batch
+  (``urltools.with_registrable_domain``); the API path calls it per
+  request;
 - ``EXCEPTIONS_BY_LEN`` / ``EXACT_BY_LEN`` / ``TAILS_BY_LEN`` — the
-  shape the JVM ``Column`` expression consumes (functions/urltools.py):
-  one hash-set membership probe (Catalyst ``InSet``) per distinct
-  suffix length, longest first.
+  rules split by kind and label count, which ``suffix_len`` probes
+  with one set lookup per suffix length, longest first.
 
 Rule-count sanity is pinned by tests: the snapshot has ~9.5k rules
 (5,483 two-label, 2,375 three-label, 100 four-label, 68 five-label, 107
@@ -140,8 +142,7 @@ MAX_SUFFIX_LEN: int = max(
 
 def suffix_len(labels: list[str]) -> int:
     """Number of labels in the public suffix of ``labels`` (the PSL
-    algorithm in Python — the executable spec the JVM expression and the
-    DuckDB oracles are tested against)."""
+    algorithm)."""
     n = len(labels)
     top = min(n, MAX_SUFFIX_LEN + 1)
     # exception rules prevail over any longer match (PSL spec step: "if
@@ -158,7 +159,9 @@ def suffix_len(labels: list[str]) -> int:
     return 1  # implicit "*" rule
 
 
-@lru_cache(maxsize=None)
+# Bounded: Spark's reused Python workers call this for every distinct
+# host they see, so an unbounded cache would grow with the crawl.
+@lru_cache(maxsize=1 << 16)
 def etld_plus_one_py(host: str) -> str | None:
     """Registrable domain of an already-lowercased host, or None when it
     has none (single label, or the host IS a public suffix). Mirrors

@@ -1,14 +1,11 @@
 """URL & domain kernel — P1-P11 of the operator inventory (SURVEY §2.2).
 
-Everything is a Column expression. The public-suffix computation
-(reference: golang.org/x/net/publicsuffix via
-/root/reference/pkg/commoncrawl/wat.go:660-672) has exactly one Spark
-form, ``with_registrable_domain``: it evaluates the FULL bundled Mozilla
-PSL snapshot (~9.5k rules, ``functions/psl.py``) with two broadcast
-suffix-table joins for the large rule lengths and small inline ``InSet``
-probes for the rest, inside whole-stage codegen with no Python worker.
-``psl.etld_plus_one_py`` is the pure-Python spec it is tested against
-and the form the driver-side API path calls per request.
+Everything is a Column expression except the public suffix
+(reference: golang.org/x/net/publicsuffix, called at wat.go:660-672).
+That has one algorithm, ``psl.etld_plus_one_py`` over the FULL bundled
+Mozilla PSL snapshot (~9.5k rules, ``functions/psl.py``).
+``with_registrable_domain`` runs it in Spark once per distinct host of
+each Arrow batch; the driver-side API path calls it per request.
 
 Semantics cited into the reference:
 - URL parse + host normalize + default path: buildURLRecord wat.go:623-678
@@ -27,203 +24,49 @@ from globallinks_spark.config import IGNORED_QUERY_PREFIXES
 from globallinks_spark.functions import psl
 from globallinks_spark.functions.binding import bind_once
 
-# ---------------------------------------------------------------------------
-# Public-suffix kernel. Rule data + the pure-Python spec live in
-# functions/psl.py (full bundled Mozilla snapshot, ~9.5k rules).
-
-# Literal Columns are py4j objects; building ~9.5k of them costs ~1 s of
-# driver round trips, so build once per process and reuse (unresolved
-# literal expressions are plan-independent and outlive any one query;
-# the py4j gateway lives for the whole process).
-_psl_lit_cache: dict[tuple[str, int], list[Column]] = {}
-
-
-def _psl_lits(kind: str, k: int, values: frozenset[str]) -> list[Column]:
-    key = (kind, k)
-    if key not in _psl_lit_cache:
-        _psl_lit_cache[key] = [F.lit(v) for v in sorted(values)]
-    return _psl_lit_cache[key]
-
-
-def _etld_expr_parts(
-    host: Column, big_markers: dict[int, Column], labels: Column,
-) -> Column:
-    """The eTLD+1 Column tree over ``host`` split into ``labels``.
-
-    ``big_markers`` maps a suffix length s to a boolean Column that is
-    true when the host's length-s suffix is an exact rule of that
-    length — supplied by ``with_registrable_domain``'s broadcast joins
-    for the two lengths whose rule sets are large (5,771 two-label and
-    2,309 three-label rules). Lengths not in the dict probe an inline
-    ``InSet`` instead (fine for the remaining ~250 rules; pathological
-    for thousands: a ~9.5k-literal tree bloats every task binary and
-    generates methods the JIT takes tens of seconds to converge on).
-    """
-    n = F.size(labels)
-
-    def suffix(k: int) -> Column:
-        # greatest(start, 1) keeps the slice ANSI-legal for hosts with
-        # fewer than k labels (start 0 is an error); the (n >= k) term in
-        # every consumer makes the clamped value semantically inert. The
-        # clamp matters because codegen subexpression elimination may
-        # hoist these probes onto the guaranteed-evaluation path.
-        start = F.greatest(n - F.lit(k - 1), F.lit(1))
-        return F.concat_ws(".", F.slice(labels, start, k))
-
-    def probe(s: int) -> Column | None:
-        out: Column | None = None
-        if s in big_markers:
-            out = big_markers[s]
-        elif s in psl.EXACT_BY_LEN:
-            out = suffix(s).isin(*_psl_lits("exact", s, psl.EXACT_BY_LEN[s]))
-        if s - 1 in psl.TAILS_BY_LEN:
-            wild = suffix(s - 1).isin(
-                *_psl_lits("tail", s - 1, psl.TAILS_BY_LEN[s - 1])
-            )
-            out = wild if out is None else (out | wild)
-        if out is None:
-            return None
-        return (n >= s) & out
-
-    # longest-match suffix length, branch-free: greatest() over one
-    # when(cond, s) per rung keeps every rung's condition on codegen's
-    # guaranteed-evaluation path, so the split/slice/concat subtrees are
-    # computed once per row and shared (a when-CHAIN puts rungs 2..k on
-    # the conditional path, where subexpression elimination is disabled —
-    # measured ~9 µs/row vs ~1 µs/row for this shape).
-    rungs = [
-        F.when(p, F.lit(s))
-        for s in range(psl.MAX_SUFFIX_LEN, 1, -1)
-        if (p := probe(s)) is not None
-    ]
-    g = F.greatest(*rungs, F.lit(1)) if rungs else F.lit(1)
-
-    # exception rules prevail over any longer match (PSL spec); applied
-    # as arithmetic select so nothing drops to the conditional path
-    slen: Column = g
-    for k in sorted(psl.EXCEPTIONS_BY_LEN):
-        exc = (
-            (n >= k)
-            & suffix(k).isin(*_psl_lits("exc", k, psl.EXCEPTIONS_BY_LEN[k]))
-        ).cast("int")
-        slen = exc * F.lit(k - 1) + (F.lit(1) - exc) * slen
-
-    start = F.greatest(n - slen, F.lit(1))  # ANSI clamp, as above
-    out = F.concat_ws(".", F.slice(labels, start, slen + F.lit(1)))
-    return F.when(
-        host.isNull() | (host == "") | ~host.contains(".") | (n <= slen),
-        F.lit(None).cast("string"),
-    ).otherwise(out)
-
-
-# Packed suffix-rule strings for the two large rule lengths —
-# session-INDEPENDENT, so a plain module dict is safe. Only the string
-# is cached: an earlier version cached the built DataFrames weak-keyed
-# by session, but a DataFrame strongly references its SparkSession, so
-# the WeakKeyDictionary's values pinned their own keys and stopped
-# sessions stayed alive (round-2 advice). Rebuilding the frame is three
-# gateway calls on a 1-row range — nothing; the cost worth caching is
-# the one ~80 KB join over the 5.8k-rule set below.
-_packed_rules_cache: dict[int, str] = {}
-
-# Built marker-based eTLD+1 trees, keyed by host column name (the tree
-# also references the fixed __psl_m2/__psl_m3 join-marker names).
-_etld_marker_expr_cache: dict[str, Column] = {}
-
-
-def _suffix_df(spark, k: int):
-    if k not in _packed_rules_cache:
-        _packed_rules_cache[k] = "|".join(sorted(psl.EXACT_BY_LEN[k]))
-    # One ~80 KB string literal split JVM-side: row-by-row
-    # createDataFrame of the 5.8k-rule table costs ~2.5 s of py4j
-    # serialization (measured); this is one gateway call and the
-    # split/explode runs in the JVM.
-    packed = _packed_rules_cache[k]
-    return (
-        spark.range(1)
-        .select(F.explode(F.split(F.lit(packed), r"[|]")).alias(f"__psl_s{k}"))
-        .withColumn(f"__psl_m{k}", F.lit(True))
-    )
-
 
 def with_registrable_domain(
     df: DataFrame, host_col: str, out_col: str
 ) -> DataFrame:
-    """eTLD+1 of ``host_col`` into ``out_col`` as a broadcast-join
-    transform — the one Spark form of the kernel, and the 100 TB hot
-    path. NULL and empty hosts map to NULL.
+    """eTLD+1 of ``host_col`` into ``out_col``. NULL and empty hosts map
+    to NULL.
 
-    The two big rule sets (two- and three-label exact rules) live in
-    broadcast hash joins: the host's length-2 and length-3 suffixes are
-    computed once, left-joined against ~8 k-row broadcast tables
-    (map-side, no shuffle, no row multiplication — rule tables are
-    distinct), and the remaining ~250 rules (4/5-label exacts, wildcard
-    tails, exceptions) stay as small inline ``InSet`` probes. Per-row
-    cost: one split, two broadcast-hash probes, ~6 small set probes.
-    Inlining all ~9.5k rules instead bloats every task binary (~1.8 MB)
-    and costs tens of seconds of JIT warm-up per stage — measured 2×
-    end-to-end extraction slowdown even warm.
+    One scalar pandas UDF: each Arrow batch is factorized into its
+    distinct non-null hosts, each distinct host goes through
+    ``psl.etld_plus_one_py`` once (compute on the dictionary — link
+    hosts repeat heavily), and the codes map the answers back onto the
+    batch.
 
     The result is bound behind the optimization barrier: callers
     reference the domain many times (classification, dedup keys,
-    filters), and without the barrier CollapseProject/pushdown
-    re-inlines the whole tree per reference (measured 1,110 split()
-    copies in the extraction plan). Batch-only barrier.
+    filters), and without the barrier the optimizer pushes the UDF into
+    the downstream filter too, evaluating it twice per row (one extra
+    ``ArrowEvalPython`` per call, pinned by tests/test_plans.py).
+
+    The UDF is built per call, not at import: ``serve`` imports this
+    module but never resolves eTLD+1 in Spark, and a module-level
+    ``pandas_udf`` would add the pandas and pyarrow imports to its
+    startup.
 
     Reference semantics: publicsuffix.EffectiveTLDPlusOne
-    (wat.go:660-672); parity with the pure-Python spec
-    ``psl.etld_plus_one_py`` is pinned by tests/test_psl_full.py.
+    (wat.go:660-672), memoized per host like the reference's
+    ``domainCache`` (wat.go:139-143).
     """
-    host = F.col(host_col)
-    # Bind the label split ONCE behind the optimization barrier: the
-    # suffix probes, the join keys, and the final slice all reference the
-    # bound attribute, so the split appears once in the plan instead of
-    # ~90× (CollapseProject re-inlines deterministic aliases into every
-    # reference; measured the duplication doubles Janino compile time).
-    # Strip leading/trailing dots before splitting, as the spec does: a
-    # trailing dot ('example.com.') would add an empty label, every
-    # suffix probe would miss, and the result would be 'com.' instead of
-    # the spec's 'example.com'.
-    df = df.withColumn(
-        "__psl_labels",
-        bind_once(
-            F.split(F.regexp_replace(host, r"^\.+|\.+$", ""), r"\.")
-        ),
-    )
-    labels = F.col("__psl_labels")
-    n = F.size(labels)
+    import numpy as np
+    import pandas as pd
 
-    def suffix(k: int) -> Column:
-        start = F.greatest(n - F.lit(k - 1), F.lit(1))
-        return F.concat_ws(".", F.slice(labels, start, k))
-
-    spark = df.sparkSession
-    joined = df.withColumns(
-        {"__psl_s2": suffix(2), "__psl_s3": suffix(3)}
-    )
-    joined = joined.join(
-        F.broadcast(_suffix_df(spark, 2)), on="__psl_s2", how="left"
-    )
-    joined = joined.join(
-        F.broadcast(_suffix_df(spark, 3)), on="__psl_s3", how="left"
-    )
-    # The output tree references only fixed names (host_col, __psl_m2/3),
-    # so it is plan-independent — cache it: building it costs ~2.5 s of
-    # py4j round trips (measured), paid per *query construction* without
-    # the cache.
-    cache_key = host_col
-    if cache_key not in _etld_marker_expr_cache:
-        markers = {
-            2: F.col("__psl_m2").isNotNull(),
-            3: F.col("__psl_m3").isNotNull(),
-        }
-        _etld_marker_expr_cache[cache_key] = _etld_expr_parts(
-            host, markers, labels
+    # unannotated (a scalar UDF by default): the module's postponed
+    # annotations could not resolve the locally imported ``pd``
+    @F.pandas_udf("string")
+    def etld_plus_one(hosts):
+        codes, distinct = pd.factorize(hosts)
+        # the trailing None is what code -1 (a NULL host) indexes
+        domains = np.array(
+            [psl.etld_plus_one_py(h) for h in distinct] + [None], dtype=object
         )
-    out = bind_once(_etld_marker_expr_cache[cache_key])
-    return joined.withColumn(out_col, out).drop(
-        "__psl_labels", "__psl_s2", "__psl_s3", "__psl_m2", "__psl_m3"
-    )
+        return pd.Series(domains[codes])
+
+    return df.withColumn(out_col, bind_once(etld_plus_one(F.col(host_col))))
 
 
 # ---------------------------------------------------------------------------
@@ -277,10 +120,6 @@ def url_raw_query(url: Column, blank_ignored: bool = True) -> Column:
         pat = "^(" + "|".join(IGNORED_QUERY_PREFIXES) + ")"
         q = F.when(q.rlike(pat), F.lit("")).otherwise(q)
     return q
-
-
-def url_fragment(url: Column) -> Column:
-    return F.coalesce(F.parse_url(_parseable(url), F.lit("REF")), F.lit(""))
 
 
 def subdomain(host: Column, domain: Column) -> Column:

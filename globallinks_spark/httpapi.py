@@ -107,9 +107,22 @@ class RateLimiter:
             return count > self.limit
 
 
+def _optional_str(obj: dict, key: str, default: str | None) -> str | None:
+    """``obj[key]`` when it is a string, ``default`` when absent or null.
+    The reference decodes these fields into Go strings, so any other JSON
+    type is a 400 there; here it is a ValueError (→ 400 ErrorParsing)."""
+    value = obj.get(key)
+    if value is None:
+        return default
+    if not isinstance(value, str):
+        raise ValueError(f"{key} must be a string")
+    return value
+
+
 def parse_api_request(body: bytes) -> LinkQuery:
     """APIRequest JSON (models.go:40-58) → LinkQuery. Raises ValueError
-    on unparseable JSON, KeyError("domain") when absent/empty."""
+    on unparseable JSON or a mistyped field, KeyError("domain") when
+    absent/empty."""
     doc = json.loads(body)
     if not isinstance(doc, dict):
         raise ValueError("request body must be a JSON object")
@@ -128,15 +141,16 @@ def parse_api_request(body: bytes) -> LinkQuery:
         # that drops the connection
         raise ValueError("filters must be a list of objects")
     filters = [
-        (f.get("name", ""), f.get("val", ""), f.get("kind", "exact"))
+        (_optional_str(f, "name", ""), _optional_str(f, "val", ""),
+         _optional_str(f, "kind", "exact"))
         for f in raw_filters
     ]
     return LinkQuery(
         domain=str(domain),
         limit=int(doc.get("limit") or 100),
         page=int(doc.get("page") or 1),
-        sort=doc.get("sort"),
-        order=doc.get("order") or "asc",
+        sort=_optional_str(doc, "sort", None),
+        order=_optional_str(doc, "order", None) or "asc",
         filters=filters,
     )
 

@@ -68,12 +68,11 @@ def pages_with_url_record(wat_pages: DataFrame) -> DataFrame:
     gated = wat_pages.filter(uri.startswith("http") & ~uri.contains("\n"))
 
     host = U.url_host(uri)
-    # Explicit column list, not "*": a broadcast join follows, and join
-    # output rows are materialized (UnsafeRow copy) — carrying the raw
-    # metas/head_links arrays and envelope scalars through it costs more
-    # than the join itself. metas collapses to the two robots flags and
-    # head_links to the (rare, short) canonicals array right here; only
-    # the links array must survive to the explode.
+    # Explicit column list, not "*": the eTLD+1 UDF's ArrowEvalPython
+    # buffers every input row in the JVM until its batch returns, so
+    # metas collapses to the two robots flags and head_links to the
+    # (rare, short) canonicals array right here; only the links array
+    # must survive to the explode.
     bound = gated.select(
         F.col("title"),
         F.col("links"),
@@ -87,9 +86,9 @@ def pages_with_url_record(wat_pages: DataFrame) -> DataFrame:
         F.try_to_date(F.col("warc_date")).alias("date_imported"),
         F.coalesce(F.col("warc_ip"), F.lit("")).alias("ip"),
     )
-    # eTLD+1 over the bound host attribute via the broadcast suffix-table
-    # join (full PSL; map-side, no shuffle — see with_registrable_domain);
-    # bound so the F7 gate below references an attribute, not the tree
+    # eTLD+1 over the bound host attribute, once per distinct host of
+    # each Arrow batch (see with_registrable_domain); bound so the F7
+    # gate below references an attribute instead of a second UDF call
     bound = U.with_registrable_domain(bound, "page_host", "page_domain")
     return bound.filter(
         P.path_ok(F.col("page_path"))
@@ -123,10 +122,10 @@ def explode_links(pages: DataFrame) -> DataFrame:
     One Project computes the link kernel AND the classification; the
     anchor gate (F3) runs on the raw exploded struct before any kernel
     work."""
-    # Explicit column list again: the link-side broadcast join below
-    # materializes every exploded row, so only the slim page scalars may
-    # ride along (the links array is consumed here; canonicals was only
-    # for the page gate).
+    # Explicit column list again: the link-side eTLD+1 UDF below buffers
+    # every exploded row, so only the slim page scalars may ride along
+    # (the links array is consumed here; canonicals was only for the
+    # page gate).
     exploded = pages.select(
         "page_host", "page_path", "page_raw_query", "page_scheme",
         "page_domain", "no_index", "page_no_follow", "date_imported",
@@ -160,11 +159,10 @@ def explode_links(pages: DataFrame) -> DataFrame:
         _bind(F.when(is_absolute, U.url_raw_query(href)))
         .alias("link_raw_query"),
     )
-    # eTLD+1 over the bound host attribute via the broadcast suffix-table
-    # join (full PSL; map-side, no shuffle), bound behind the barrier so
-    # the dozens of downstream references (classification, dedup keys,
-    # subdomain) see an attribute instead of re-inlining the tree. A null
-    # host (relative href) misses both joins and null-guards through.
+    # eTLD+1 over the bound host attribute, bound behind the barrier so
+    # the downstream references (classification, dedup keys, subdomain)
+    # see an attribute instead of another UDF call. A null host
+    # (relative href) comes out NULL.
     bound = U.with_registrable_domain(bound_parts, "link_host", "link_domain")
 
     # classification references only attributes — a small tree that stays

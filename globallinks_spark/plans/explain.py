@@ -48,20 +48,6 @@ def plan_string(df: DataFrame, mode: str = "formatted") -> str:
         ) from exc
 
 
-def executed_plan(df: DataFrame) -> str:
-    """Final (post-AQE-planning) physical plan string."""
-    return _query_execution(df).executedPlan().toString()
-
-
-def assert_pushed_filters(df: DataFrame, *fragments: str) -> None:
-    """Every fragment must appear in a parquet PushedFilters list."""
-    plan = plan_string(df)
-    for frag in fragments:
-        assert frag in plan, (
-            f"expected pushed filter {frag!r}; plan:\n{plan}"
-        )
-
-
 def assert_read_schema_only(df: DataFrame, *columns: str) -> None:
     """The parquet ReadSchema must contain exactly these columns —
     column pruning reached the scan."""

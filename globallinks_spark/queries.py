@@ -413,11 +413,9 @@ def q_url_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
         U.url_path(F.col("url")).alias("path"),
         U.url_raw_query(F.col("url")).alias("raw_query"),
     )
-    # eTLD+1 via the production broadcast suffix-table join (full PSL).
-    # The result is bound: sub_domain references `domain` 4× — without
-    # the barrier CollapseProject inlines the eTLD tree into every
-    # reference (measured: 91 split() copies in the optimized plan,
-    # ~10 s of codegen+JIT for a 15k-row input; 4 copies and <2 s with it).
+    # eTLD+1 via the production kernel (full PSL, one pandas UDF call
+    # per distinct host of each Arrow batch). Its result is bound, so
+    # sub_domain's 4 references to `domain` read one attribute.
     parsed = U.with_registrable_domain(parsed, "host", "domain")
     return parsed.select(
         "c_custkey", "scheme_code", "host", "path", "raw_query", "domain",

@@ -16,20 +16,18 @@ Stages (cumulative, each materialized through the noop sink):
     json         + from_json envelope parse + field extraction
     page_kernel  + page URL kernel, eTLD+1, robots/canonical gates
     full         extract_links end-to-end (explode, link kernel,
-                 PSL broadcast joins, classification, A2 dedup)
+                 eTLD+1 UDF, classification, A2 dedup)
 
-`psl_share_sec` re-times `full` with the eTLD+1 broadcast-join
-transform swapped for a trivial suffix stub (identical row flow, no
-PSL work): the delta is the full-semantics public-suffix cost.
+`psl_share_sec` re-times `full` with the eTLD+1 UDF swapped for a
+trivial suffix stub (identical row flow, no PSL work): the delta is
+the full-semantics public-suffix cost.
 
 Usage: python profile_extract.py [n_pages] [cores] [out_json]
 """
 
 from __future__ import annotations
 
-import gzip
 import json
-import os
 import shutil
 import sys
 import tempfile
@@ -38,7 +36,7 @@ from unittest import mock
 
 from pyspark.sql import functions as F
 
-from bench_extract import _page, measure_extract
+from bench_extract import measure_extract, write_corpus
 from globallinks_spark.functions.binding import bind_once
 from globallinks_spark.operators import extract as X
 from globallinks_spark.session import get_spark
@@ -71,16 +69,7 @@ def main() -> None:
 
     work = tempfile.mkdtemp(prefix="extract_profile-")
     try:
-        n_files = max(cores, 1)
-        per = n_pages // n_files
-        for f in range(n_files):
-            p = os.path.join(work, f"prof-{f:05d}.warc.wat.gz")
-            with gzip.open(p, "wt", encoding="utf-8") as out:
-                for i in range(f * per, (f + 1) * per):
-                    out.write("WARC-Type: metadata\n")
-                    out.write(json.dumps(_page(i)) + "\n")
-        paths = sorted(os.path.join(work, p) for p in os.listdir(work))
-
+        paths = write_corpus(n_pages, max(cores, 1), work)
         raw = spark.read.text(paths)
         pages = read_wat_pages(spark, paths)
         gated = X.content_quality_gate(X.pages_with_url_record(pages))
@@ -93,7 +82,7 @@ def main() -> None:
             "full_sec": _timeit(spark, full),
         }
 
-        # PSL share: identical pipeline, eTLD+1 joins swapped for a
+        # PSL share: identical pipeline, eTLD+1 UDF swapped for a
         # trivial last-two-labels stub (same row flow / column shape)
         def _stub(df, host_col, out_col):
             out = F.substring_index(F.col(host_col), ".", -2)
@@ -122,7 +111,7 @@ def main() -> None:
                     "(r6 host, idle, steal~0), so compare figures only "
                     "within one session on one host; stage split shows "
                     "where materialized time goes (JSON parse, URL "
-                    "kernel, PSL joins, A2 dedup shuffle).",
+                    "kernel, eTLD+1 UDF, A2 dedup shuffle).",
         }
         with open(out_json, "w", encoding="utf-8") as fh:
             json.dump(result, fh, indent=1)

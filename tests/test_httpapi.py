@@ -301,6 +301,24 @@ class TestMalformedFilters:
             )
             assert (status, doc["errorCode"]) == (400, "ErrorParsing"), bad
 
+    def test_non_string_fields_return_400(self, served):
+        """sort/order and each filter's name/val/kind decode into Go
+        strings in the reference, so another JSON type is its 400. Here
+        a list once reached the query layer and raised TypeError
+        (unhashable list) there: a 500 ErrorFailedLinks."""
+        for body in (
+            {"domain": "example.com", "sort": ["linkUrl"]},
+            {"domain": "example.com", "order": {"dir": "desc"}},
+            {"domain": "example.com",
+             "filters": [{"name": ["Anchor"], "val": "x"}]},
+            {"domain": "example.com",
+             "filters": [{"name": "Anchor", "val": 1}]},
+            {"domain": "example.com",
+             "filters": [{"name": "Anchor", "val": "x", "kind": 0}]},
+        ):
+            status, doc, _ = _post(served, body)
+            assert (status, doc["errorCode"]) == (400, "ErrorParsing"), body
+
 
 class TestContentLength:
     """The edge must not trust Content-Length: a negative value once

@@ -124,23 +124,24 @@ class TestUrlKernelStaysJvmSide:
             f"bind_once barrier broke: {plan.count('from_json')} "
             "from_json copies in the extraction plan (expected exactly 1)"
         )
-        # the eTLD+1 barrier too. The domain tree legitimately contains
-        # ~8 split() references per domain column (shared by codegen
-        # subexpression elimination — ~180 plan-string occurrences
-        # total); a blown barrier re-inlines the whole tree per
-        # downstream consumer, measured at 1,110 occurrences.
-        assert plan.count("split(") < 400
+        # the eTLD+1 barrier too: one ArrowEvalPython per domain column
+        # (page and link). Without the barrier the UDF is pushed into
+        # the filter that reads each domain as well, giving 4.
+        n_udf = plan_string(links, "simple").count("ArrowEvalPython")
+        assert n_udf == 2, (
+            f"{n_udf} ArrowEvalPython nodes in the executed extraction "
+            "plan (expected exactly 2)"
+        )
 
     def test_no_python_eval_in_extract_filters(self, spark_noaqe):
-        """Everything except the eTLD+1 UDF must stay JVM-side: exactly
-        the explode/link-kernel stage may evaluate Python, filters and
-        dedup must not add more."""
+        """The eTLD+1 kernel is the extraction's only Python code, and
+        it must run Arrow-batched: a row-at-a-time BatchEvalPython
+        (pickled rows) anywhere in the plan fails."""
         from globallinks_spark.operators import extract
         from globallinks_spark.schemas import WAT_PAGE_SCHEMA
 
         pages = spark_noaqe.createDataFrame([], WAT_PAGE_SCHEMA)
         plan = plan_string(extract.extract_links(pages))
-        # the one pandas UDF appears; no row-at-a-time BatchEvalPython
         assert "BatchEvalPython" not in plan
 
 

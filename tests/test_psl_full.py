@@ -85,8 +85,8 @@ def _corpus() -> list[str]:
     return hosts
 
 
-class TestJvmExpressionParity:
-    def test_broadcast_join_path_matches_python_spec(self, spark):
+class TestSparkFormParity:
+    def test_spark_form_matches_python_spec(self, spark):
         # the production hot path (operators/extract.py) resolves eTLD+1
         # via with_registrable_domain; must agree with the spec exactly.
         # NULL and empty hosts ride along: relative hrefs reach the
@@ -105,27 +105,45 @@ class TestJvmExpressionParity:
         ]
         assert bad == []
 
-    def test_join_path_broadcasts_and_adds_no_shuffle(self, spark):
+    def test_repeated_hosts_map_back_to_their_rows(self, spark):
+        # each batch resolves its distinct hosts once; every row must
+        # still get its own host's answer, across batch boundaries too
+        base = ["a.example.co.uk", None, "x.a.b.ck", "", "www.ck", "com"]
+        rows = [(i, base[(i * 7) % len(base)]) for i in range(100)]
+        df = spark.createDataFrame(rows, "i int, host string")
+        key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+        prev = spark.conf.get(key)
+        spark.conf.set(key, "7")
+        try:
+            got = U.with_registrable_domain(df, "host", "d").collect()
+        finally:
+            spark.conf.set(key, prev)
+        assert len(got) == len(rows)
+        for r in got:
+            assert r["d"] == psl.etld_plus_one_py(r["host"]), r
+
+    def test_plan_is_one_arrow_eval_no_exchange_no_join(self, spark):
         df = spark.createDataFrame([("a.example.co.uk",)], "host string")
         plan = (
             U.with_registrable_domain(df, "host", "d")
             ._jdf.queryExecution().executedPlan().toString()
         )
-        assert plan.count("BroadcastHashJoin") == 2
-        assert "Exchange hashpartitioning" not in plan
+        assert plan.count("ArrowEvalPython") == 1
+        assert "Exchange" not in plan
+        assert "Join" not in plan
 
 
 class TestDottedHosts:
-    """Leading/trailing dots: the Python spec strips them; the
-    broadcast-join path must agree (round-2 review found the unstripped
-    split emitting 'com.' for 'example.com.')."""
+    """Leading/trailing dots: the Python spec strips them; the Spark
+    form must agree (round-2 review found an unstripped label split
+    emitting 'com.' for 'example.com.')."""
 
     CASES = [
         "example.com.", ".example.com", "www.example.co.uk.",
         "..a.example.com", "example.", ".", "com.",
     ]
 
-    def test_broadcast_join_path_strips_dots(self, spark):
+    def test_spark_form_strips_dots(self, spark):
         from globallinks_spark.functions import psl
         from globallinks_spark.functions import urltools as U
 
