@@ -19,18 +19,31 @@ from __future__ import annotations
 
 import sys
 
-from globallinks_spark.session import get_spark
-
 
 def main(argv: list[str]) -> int:
     if len(argv) < 2:
         print(__doc__)
         return 2
     cmd = argv[1]
-    spark = get_spark(app_name=f"globallinks_{cmd}")
-    from globallinks_spark import runner
-    from globallinks_spark.operators.linkdb import LinkQuery, to_json_response
+    # the linksapi half reads parquet with pyarrow: no SparkSession, no JVM
+    if cmd == "query" and len(argv) >= 4:
+        from globallinks_spark.operators import linkdb as L
 
+        q = L.LinkQuery(argv[3], *map(int, argv[4:6]))  # limit, page
+        for line in L.to_json_response(L.query_serving(argv[2], q)):
+            print(line)
+        return 0
+    if cmd == "serve" and len(argv) in (3, 4, 6):
+        from globallinks_spark.httpapi import serve
+
+        # port, then the TLS certfile and keyfile
+        serve(argv[2], int(argv[3]) if len(argv) > 3 else 8010, *argv[4:])
+        return 0
+
+    from globallinks_spark import runner
+    from globallinks_spark.session import get_spark
+
+    spark = get_spark(app_name=f"globallinks_{cmd}")
     if cmd == "importer" and len(argv) >= 4:
         max_files = int(argv[4]) if len(argv) > 4 else None
         segments = argv[5:] or None
@@ -54,14 +67,6 @@ def main(argv: list[str]) -> int:
     elif cmd == "store" and len(argv) in (4, 5):
         buckets = int(argv[4]) if len(argv) == 5 else None  # None → auto
         runner.run_store(spark, argv[2], argv[3], buckets)
-    elif cmd == "query" and len(argv) >= 4:
-        q = LinkQuery(
-            domain=argv[3],
-            limit=int(argv[4]) if len(argv) > 4 else 100,
-            page=int(argv[5]) if len(argv) > 5 else 1,
-        )
-        for line in to_json_response(runner.query_links(spark, argv[2], q)):
-            print(line)
     elif cmd == "sql" and len(argv) in (4, 5):
         from globallinks_spark.queries import register_views
 
@@ -117,15 +122,6 @@ def main(argv: list[str]) -> int:
                 print(_json.dumps(f))
         else:
             print(plan_string(REGISTRY[name].fn(spark, argv[2]), mode))
-    elif cmd == "serve" and len(argv) in (3, 4, 6):
-        from globallinks_spark.httpapi import serve
-
-        serve(
-            spark, argv[2],
-            int(argv[3]) if len(argv) > 3 else 8010,
-            certfile=argv[4] if len(argv) == 6 else None,
-            keyfile=argv[5] if len(argv) == 6 else None,
-        )
     else:
         print(__doc__)
         return 2

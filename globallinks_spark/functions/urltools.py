@@ -12,7 +12,6 @@ Semantics cited into the reference:
 - scheme encode http→"1" https→"2" else "0":  setScheme  wat.go:821-829
 - subdomain = host minus "."+domain:          genSubdomain wat.go:953-962
 - tracking-query blank-out:                   ignoreQuery  wat.go:726-733
-- URL reconstruction for API output:          pkg/linkdb/controller.go:201-265
 """
 
 from __future__ import annotations
@@ -43,10 +42,8 @@ def with_registrable_domain(
     the downstream filter too, evaluating it twice per row (one extra
     ``ArrowEvalPython`` per call, pinned by tests/test_plans.py).
 
-    The UDF is built per call, not at import: ``serve`` imports this
-    module but never resolves eTLD+1 in Spark, and a module-level
-    ``pandas_udf`` would add the pandas and pyarrow imports to its
-    startup.
+    The UDF is built per call, not at import, so importing this module
+    does not import pandas.
 
     Reference semantics: publicsuffix.EffectiveTLDPlusOne
     (wat.go:660-672), memoized per host like the reference's
@@ -84,13 +81,6 @@ def scheme_code(scheme: Column) -> Column:
         .when(F.lower(scheme) == "http", F.lit("1"))
         .otherwise(F.lit("0"))
     )
-
-
-def decode_scheme(code: Column) -> Column:
-    """Inverse of ``scheme_code`` for API URL reconstruction. NOTE the
-    reference decoder maps '0'→https (controller.go:239-244, a lossy
-    round-trip); we keep that quirk for output parity."""
-    return F.when(code == "1", F.lit("http")).otherwise(F.lit("https"))
 
 
 def _parseable(url: Column) -> Column:
@@ -138,17 +128,6 @@ def scrub_delimiter(text: Column) -> Column:
     """P7 — '|' → ' ' in free text (Title wat.go:334, LinkText wat.go:355).
     Only needed for pipe-text interchange; harmless on parquet."""
     return F.regexp_replace(text, r"\|", " ")
-
-
-def reconstruct_url(
-    scheme_col: Column, sub: Column, domain: Column,
-    path: Column, query: Column,
-) -> Column:
-    """P10 — scheme://[sub.]domain[path][?query] for API output
-    (controller.go:201-211, 246-265)."""
-    host = F.when(sub == "", domain).otherwise(F.concat_ws(".", sub, domain))
-    q = F.when(query == "", F.lit("")).otherwise(F.concat(F.lit("?"), query))
-    return F.concat(decode_scheme(scheme_col), F.lit("://"), host, path, q)
 
 
 def wat_file_number(path: Column) -> Column:

@@ -18,10 +18,9 @@ Stdlib-only port of the reference's server surface
 - error body: {"errorCode", "function", "error"} (models.go:60-65
   ApiError tags; error.go:6-13 GenerateError)
 
-The Spark session serves queries through ``runner.query_links`` — a
-partition-pruned scan per request, so a request touches one bucket
-directory, not the table. The server is a thin driver-side edge: one
-ThreadingHTTPServer in the driver process, the cluster does the scan.
+``linkdb.query_serving`` answers each request in this process: a pyarrow
+read of one bucket directory, then merge, sort and page in Arrow. The
+server is one ThreadingHTTPServer and starts no Spark.
 """
 
 from __future__ import annotations
@@ -37,7 +36,8 @@ import urllib.parse
 from collections.abc import Callable
 
 from globallinks_spark.config import VALID_DOMAIN_REGEX
-from globallinks_spark.operators.linkdb import LinkQuery
+from globallinks_spark.operators.linkdb import (
+    LinkQuery, check_patterns, query_serving, to_json_response)
 
 RATE_LIMIT = 50                  # controller.go:283
 RATE_WINDOW_SEC = 15 * 60        # controller.go:284
@@ -56,7 +56,7 @@ _VALID_DOMAIN = re.compile(
 
 def is_valid_domain(domain: str) -> bool:
     """IsValidDomain (wat.go:613-620) — the edge gate the handler applies
-    before any Spark work."""
+    before any query work."""
     return bool(_VALID_DOMAIN.match(domain))
 
 
@@ -121,8 +121,9 @@ def _optional_str(obj: dict, key: str, default: str | None) -> str | None:
 
 def parse_api_request(body: bytes) -> LinkQuery:
     """APIRequest JSON (models.go:40-58) → LinkQuery. Raises ValueError
-    on unparseable JSON or a mistyped field, KeyError("domain") when
-    absent/empty."""
+    on unparseable JSON, a mistyped field or a filter pattern RE2
+    rejects, OverflowError on an infinite limit or page,
+    KeyError("domain") when absent/empty."""
     doc = json.loads(body)
     if not isinstance(doc, dict):
         raise ValueError("request body must be a JSON object")
@@ -145,6 +146,7 @@ def parse_api_request(body: bytes) -> LinkQuery:
          _optional_str(f, "kind", "exact"))
         for f in raw_filters
     ]
+    check_patterns(filters)
     return LinkQuery(
         domain=str(domain),
         limit=int(doc.get("limit") or 100),
@@ -160,7 +162,7 @@ def make_handler(
     limiter: RateLimiter,
 ) -> type[http.server.BaseHTTPRequestHandler]:
     """Build the request handler around a ``LinkQuery -> [json row]``
-    callable (in production: runner.query_links + to_json_response)."""
+    callable (in production: linkdb.query_serving + to_json_response)."""
 
     class Handler(http.server.BaseHTTPRequestHandler):
         def _cors(self) -> None:  # enableCORS, linkdb.go:80-96
@@ -221,7 +223,7 @@ def make_handler(
                     "ErrorNoDomain", "HandlerGetDomainLinks",
                     "Domain is required"))
                 return
-            except (ValueError, TypeError, json.JSONDecodeError) as e:
+            except (ValueError, TypeError, OverflowError) as e:
                 self._send(400, api_error(
                     "ErrorParsing", "HandlerGetDomainLinks",
                     f"Error parsing request: {e}"))
@@ -245,7 +247,7 @@ def make_handler(
                 return
             self._send(200, b"[" + b",".join(r.encode() for r in rows) + b"]")
 
-        def log_message(self, *args):  # quiet: Spark logs are enough
+        def log_message(self, *args):  # quiet: a 500 logs its own traceback
             pass
 
     return Handler
@@ -279,17 +281,14 @@ def make_server(
 
 
 def serve(
-    spark, serving_path: str, port: int = 8010,
+    serving_path: str, port: int = 8010,
     certfile: str | None = None, keyfile: str | None = None,
 ) -> None:
     """``python -m globallinks_spark serve`` — the linksapi binary.
     Pass ``--cert``/``--key`` for the reference's TLS production mode
     (linkdb.go:49-57: production serves :8443 over TLS)."""
-    from globallinks_spark.operators.linkdb import to_json_response
-    from globallinks_spark.runner import query_links
-
     def query_fn(q: LinkQuery) -> list[str]:
-        return to_json_response(query_links(spark, serving_path, q))
+        return to_json_response(query_serving(serving_path, q))
 
     srv = make_server(
         query_fn, host="0.0.0.0", port=port,

@@ -212,8 +212,8 @@ JOIN last ON agg.l_partkey = last.l_partkey AND agg.l_suppkey = last.l_suppkey
 
 
 # ---------------------------------------------------------------------------
-# Q: api_merge — the A6 merge shape (operators/linkdb.merge_links) over
-# events: min/max dates widen, distinct set collects, qty sums.
+# Q: api_merge — the Arrow A6 merge (operators/linkdb.merge_links) as a
+# Spark plan over events: dates widen, distinct set collects, qty sums.
 
 def q_api_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load(spark, sf_dir, "events")

@@ -5,8 +5,8 @@ binaries (SURVEY §3):
     compacting → ``run_compact``  (segment links → compacted parquet)
     storelinks → ``run_store``    (compacted → partitioned serving table)
 
-plus ``query_links`` standing in for the linksapi HTTP endpoint (an HTTP
-layer would wrap it 1:1 — the query surface is operators/linkdb.py).
+plus ``query_links``, the linksapi query — a pyarrow read of one bucket
+directory (operators/linkdb.py), no Spark job.
 
 Idempotent restart (reference: skip WAT file if its output exists,
 cmd/importer/main.go:227-234; mark segment done if sort_N exists,
@@ -28,12 +28,12 @@ from __future__ import annotations
 
 import os
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 
-from globallinks_spark.functions.psl import etld_plus_one_py
 from globallinks_spark.operators import compact as C
 from globallinks_spark.operators import extract as X
-from globallinks_spark.operators.linkdb import LinkQuery, get_domain_links
+from globallinks_spark.operators.linkdb import LinkQuery, query_serving
 from globallinks_spark.sources import serving as SV
 from globallinks_spark.sources.wat import read_wat_pages
 
@@ -137,12 +137,10 @@ def run_store(
     loaded_at), overwritten WITH the table so it always describes
     exactly what is being served.
 
-    ``buckets=None`` (the default) sizes the layout from the input:
-    ``SV.auto_buckets`` targets ~256 MiB per bucket directory — the
-    fixed 256-bucket default over-shuffled small loads 2.6× (round-5
-    IMPORTER_E2E store stage) while the sidecar-recorded count keeps
-    readers correct for any choice. Pass an explicit count to pin a
-    cross-load layout (incremental loads into one table must agree)."""
+    ``buckets=None`` (the default) sizes the layout from the input
+    (``SV.auto_buckets``, ~256 MiB per bucket directory); the
+    sidecar-recorded count keeps readers correct for any choice. Pass an
+    explicit count to pin a cross-load layout."""
     from globallinks_spark.functions.predicates import domain_is_valid
     from pyspark.sql import functions as F
 
@@ -256,14 +254,6 @@ def run_archive(
 
 def query_links(
     spark: SparkSession, serving_path: str, request: LinkQuery,
-) -> DataFrame:
-    """The POST /api/links surface (§3.3): partition-pruned scan →
-    filter → merge → sort → paginate. The bucket layout comes from the
-    table's own metadata — callers can't desync it."""
-    # prune on the registrable domain — the table is bucketed by eTLD+1;
-    # a 'www.x.com' query must land in x.com's bucket (the sub_domain
-    # equality is applied row-level by get_domain_links)
-    domain = request.domain.lower()
-    parsed = etld_plus_one_py(domain) or domain
-    table = SV.read_serving_table(spark, serving_path, domain=parsed)
-    return get_domain_links(table, request)
+) -> pa.Table:
+    """POST /api/links (§3.3) as an Arrow table; ``spark`` is unused."""
+    return query_serving(serving_path, request)

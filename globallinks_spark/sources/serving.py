@@ -10,15 +10,19 @@ the bucket count scales the layout to 100 TB (buckets=1024 → ~100 GB per
 bucket directory, each internally splittable by parquet row groups).
 
 Bucketing by hash (not by first letter) keeps Zipfian domain skew from
-concentrating hot domains in one partition.
+concentrating hot domains in one partition. The hash is crc32, which
+``zlib`` computes too, so the API finds a bucket (``bucket_dir``) without
+Spark.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import zlib
+from pathlib import Path
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 DEFAULT_BUCKETS = 256
@@ -32,20 +36,17 @@ _MIN_BUCKETS, _MAX_BUCKETS = 8, 4096
 _WRITERS_PER_BUCKET = 4
 _BUCKET_COL = "domain_bucket"
 _META_FILE = "_serving_meta.json"
+_BUCKET_HASH = "crc32"  # recorded in the sidecar; any other must re-store
 _MANIFEST_DIR = "_manifest"
 
 
 def auto_buckets(df: DataFrame) -> int:
     """Size-aware bucket count from the plan's size estimate (for a
-    parquet scan: sum of file sizes — no job runs). Round 5's importer
-    e2e showed the fixed 256-bucket layout over-shuffling small loads:
-    1.28M rows fanned into 1024 write tasks / ~1024 parquet files, and
-    the store stage (11.6 s) cost 2.6× the compact stage. The layout
-    parameter belongs to the DATA size, not a constant: ~256 MiB per
-    bucket, power-of-two-rounded, clamped to [8, 4096]. Readers adapt
-    via the ``_serving_meta.json`` sidecar, so the write-time choice is
-    self-describing. Falls back to DEFAULT_BUCKETS when the estimate is
-    unavailable (non-file source with CBO off)."""
+    parquet scan: sum of file sizes — no job runs): ~256 MiB per bucket,
+    power-of-two-rounded, clamped to [8, 4096]; a fixed count
+    over-shuffles small loads. Readers adapt via the
+    ``_serving_meta.json`` sidecar. Falls back to DEFAULT_BUCKETS when
+    the estimate is unavailable (non-file source with CBO off)."""
     try:
         size = int(
             df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
@@ -62,8 +63,15 @@ def _buckets_for_bytes(size: int) -> int:
     return int(min(_MAX_BUCKETS, max(_MIN_BUCKETS, 1 << (n - 1).bit_length())))
 
 
-def domain_bucket(domain: F.Column, buckets: int = DEFAULT_BUCKETS) -> F.Column:
-    return F.pmod(F.xxhash64(F.lower(domain)), F.lit(buckets)).cast("int")
+def domain_bucket(domain: Column, buckets: int = DEFAULT_BUCKETS) -> Column:
+    return F.pmod(F.crc32(F.lower(domain)), F.lit(buckets)).cast("int")
+
+
+def bucket_of(domain: str, buckets: int) -> int:
+    """Python twin of ``domain_bucket``. Both hash the same bytes because
+    ``domain_is_valid`` admits only ASCII domains, whose Java and Python
+    lowercase agree and whose UTF-8 is the string itself."""
+    return zlib.crc32(domain.lower().encode()) % buckets
 
 
 def write_serving_table(
@@ -71,13 +79,10 @@ def write_serving_table(
 ) -> None:
     """Write compacted link rows partitioned by domain bucket. Rows are
     pre-shuffled on (bucket, salt) so each directory is written by up to
-    ``_WRITERS_PER_BUCKET`` parallel tasks instead of exactly one — at the
-    1024-bucket design point a bucket holds ~100 GB (SCALING.md), and a
-    single-task-per-bucket write (round 1) made every bucket a 100 GB
-    straggler, doubled when two bucket values hash-collide into one
-    task. Salting by a row-content hash keeps the shuffle balanced while
-    still bounding files-per-directory at _WRITERS_PER_BUCKET (no
-    many-small-files explosion of partitionBy on unsorted input)."""
+    ``_WRITERS_PER_BUCKET`` parallel tasks instead of one 100 GB
+    straggler at the 1024-bucket design point (SCALING.md). Salting by a
+    row-content hash keeps the shuffle balanced and bounds the files per
+    directory."""
     salt = F.pmod(
         F.xxhash64("link_sub_domain", "link_path", "page_host"),
         F.lit(_WRITERS_PER_BUCKET),
@@ -92,22 +97,28 @@ def write_serving_table(
         .partitionBy(_BUCKET_COL)
         .parquet(path)
     )
-    # persist the bucket count next to the data: a reader probing with a
-    # different modulus would prune to the wrong partition and silently
-    # return nothing — the layout parameter belongs to the table, not the
-    # caller
+    # the layout belongs to the table: a reader probing with another
+    # modulus or hash would prune to the wrong partition and return nothing
     with open(os.path.join(path, _META_FILE), "w") as f:
-        json.dump({"buckets": buckets, "bucket_col": _BUCKET_COL}, f)
+        json.dump({"buckets": buckets, "bucket_col": _BUCKET_COL,
+                   "hash": _BUCKET_HASH}, f)
 
 
 def table_buckets(path: str) -> int:
-    """Bucket count recorded at write time (falls back to the default for
-    tables written before the sidecar existed)."""
-    meta = os.path.join(path, _META_FILE)
-    if os.path.exists(meta):
-        with open(meta) as f:
-            return int(json.load(f)["buckets"])
-    return DEFAULT_BUCKETS
+    """Bucket count recorded at write time. A table whose sidecar is
+    missing or names another hash raises instead of pruning to the wrong
+    directory."""
+    sidecar = Path(path, _META_FILE)
+    meta = json.loads(sidecar.read_text()) if sidecar.exists() else {}
+    if meta.get("hash") != _BUCKET_HASH:
+        raise ValueError(f"{path}: no {_BUCKET_HASH} bucket layout in "
+                         f"{_META_FILE}; re-run store to rewrite the table")
+    return int(meta["buckets"])
+
+
+def bucket_dir(path: str, domain: str) -> str:
+    """The directory that holds ``domain``'s rows, by the recorded layout."""
+    return f"{path}/{_BUCKET_COL}={bucket_of(domain, table_buckets(path))}"
 
 
 def write_manifest(manifest: DataFrame, path: str) -> None:
@@ -132,18 +143,13 @@ def read_manifest(spark: SparkSession, path: str) -> DataFrame:
 
 def read_serving_table(
     spark: SparkSession, path: str, domain: str | None = None,
-    buckets: int | None = None,
 ) -> DataFrame:
     """Read the serving table; with ``domain`` given, add the bucket
-    predicate so Catalyst partition-prunes to a single directory before
-    the row-level domain filter. ``buckets`` defaults to the table's own
-    recorded layout."""
-    if buckets is None:
-        buckets = table_buckets(path)
+    predicate (the table's recorded layout) so Catalyst partition-prunes
+    to a single directory before the row-level domain filter."""
     df = spark.read.parquet(path)
     if domain is not None:
-        df = df.filter(
-            (F.col(_BUCKET_COL) == domain_bucket(F.lit(domain.lower()), buckets))
-            & (F.col("link_domain") == domain.lower())
-        )
+        bucket = domain_bucket(F.lit(domain.lower()), table_buckets(path))
+        df = df.filter((F.col(_BUCKET_COL) == bucket)
+                       & (F.col("link_domain") == domain.lower()))
     return df.drop(_BUCKET_COL)

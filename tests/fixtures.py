@@ -108,3 +108,23 @@ def write_wat_file(path: str, records: list[dict] = WAT_RECORDS) -> None:
             uri = rec["Envelope"]["WARC-Header-Metadata"]["WARC-Target-URI"]
             f.write(f"WARC-Target-URI: {uri}\n\n")
             f.write(json.dumps(rec) + "\n")
+
+
+def serving_rows(rows):
+    """Compacted serving rows (16-field tuples in COMPACT_COLUMNS order)
+    as the Arrow table the query layer reads."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    from globallinks_spark.schemas import COMPACT_SCHEMA
+
+    schema = to_arrow_schema(COMPACT_SCHEMA)
+    return pa.Table.from_pylist(
+        [dict(zip(schema.names, r)) for r in rows], schema=schema)
+
+
+def collect(table):
+    """A query result's rows, with attribute access like Spark Rows."""
+    from types import SimpleNamespace
+
+    return [SimpleNamespace(**r) for r in table.to_pylist()]

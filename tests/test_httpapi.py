@@ -26,6 +26,7 @@ from globallinks_spark.operators.linkdb import (
     get_domain_links,
     to_json_response,
 )
+from tests.fixtures import serving_rows
 
 
 class TestRateLimiter:
@@ -86,11 +87,9 @@ class TestEdgeValidation:
 
 
 @pytest.fixture(scope="module")
-def served(spark):
+def served():
     """Server over a 2-domain serving table; query_fn is the production
     get_domain_links + to_json_response composition."""
-    from globallinks_spark.schemas import COMPACT_SCHEMA
-
     rows = [
         ("target-one.org", "", "/article", "", "2", f"page{i}.example.org",
          "/", "", "2", f"anchor {i}", i % 2, 0,
@@ -102,7 +101,7 @@ def served(spark):
          "t", 0, 0, datetime.date(2023, 1, 1), datetime.date(2023, 1, 2),
          "10.9.9.9", 3),
     ]
-    serving = spark.createDataFrame(rows, COMPACT_SCHEMA)
+    serving = serving_rows(rows)
 
     def query_fn(q: LinkQuery):
         return to_json_response(get_domain_links(serving, q))
@@ -159,6 +158,14 @@ class TestEndToEnd:
         )
         assert status == 200 and len(docs) == 1    # 5 rows → page 3 of 2
 
+    def test_page_past_the_end_is_empty(self, served):
+        """An offset past any table (here 9,999,999,900) is an empty page,
+        not a 500: it once overflowed the query engine's int offset."""
+        for page in (3, 100_000_000, 10**30):
+            status, docs, _ = _post(
+                served, {"domain": "target-one.org", "page": page})
+            assert (status, docs) == (200, []), page
+
     def test_url_domain_normalized(self, served):
         status, docs, _ = _post(served, {"domain": "http://other.net/deep"})
         assert status == 200 and len(docs) == 1 and docs[0]["qty"] == 3
@@ -181,7 +188,7 @@ class TestEndToEnd:
             assert r.status == 200
             assert r.headers["Access-Control-Allow-Origin"] == "*"
 
-    def test_rate_limited_request_gets_429(self, spark):
+    def test_rate_limited_request_gets_429(self):
         srv = make_server(
             lambda q: [], host="127.0.0.1", port=0,
             limiter=RateLimiter(limit=1),
@@ -320,6 +327,34 @@ class TestMalformedFilters:
             assert (status, doc["errorCode"]) == (400, "ErrorParsing"), body
 
 
+    def test_infinite_limit_or_page_is_400(self, served):
+        """``1e999`` decodes to an infinite float, whose int() overflows;
+        that once escaped the handler and dropped the connection."""
+        host, port = served.removeprefix("http://").split(":")
+        for field in ("limit", "page"):
+            conn = http.client.HTTPConnection(host, int(port), timeout=10)
+            try:
+                conn.request(
+                    "POST", "/api/links",
+                    '{"domain":"d.com","%s":1e999}' % field,
+                    {"Content-Type": "application/json"})
+                r = conn.getresponse()
+                status, doc = r.status, json.loads(r.read())
+            finally:
+                conn.close()
+            assert (status, doc["errorCode"]) == (400, "ErrorParsing"), field
+
+    def test_pattern_rejected_by_re2_is_400(self, served):
+        """Filters are RE2 patterns: lookarounds, backreferences and
+        unbalanced groups are refused up front."""
+        for val in ("(?=a)", "(a)\\1", "a("):
+            status, doc, _ = _post(served, {
+                "domain": "target-one.org",
+                "filters": [{"name": "Anchor", "val": val, "kind": "any"}],
+            })
+            assert (status, doc["errorCode"]) == (400, "ErrorParsing"), val
+
+
 class TestContentLength:
     """The edge must not trust Content-Length: a negative value once
     became ``rfile.read(-1)`` (blocks until the client hangs up) and a
@@ -350,3 +385,77 @@ class TestContentLength:
         assert (status, doc["errorCode"]) == (413, "ErrorTooLarge")
         status, doc = self._post_declared(served, 1 << 40)
         assert status == 413
+
+
+class TestServeProcess:
+    """``serve`` and ``query`` read the table with pyarrow and start no
+    Spark: no JVM child process, no SparkSession."""
+
+    @pytest.fixture(scope="class")
+    def stored(self, spark, tmp_path_factory):
+        from globallinks_spark.schemas import COMPACT_SCHEMA
+        from globallinks_spark.sources.serving import write_serving_table
+
+        rows = [("target-one.org", "", "/article", "", "2", "a.example.org",
+                 "/", "", "2", "anchor", 0, 0, datetime.date(2023, 1, 1),
+                 datetime.date(2023, 2, 1), "10.0.0.1", 2)]
+        path = str(tmp_path_factory.mktemp("serve") / "serving")
+        write_serving_table(
+            spark.createDataFrame(rows, COMPACT_SCHEMA), path, buckets=8)
+        return path
+
+    def test_serve_starts_no_jvm(self, stored):
+        import os
+        import socket
+        import subprocess
+        import sys
+        import time
+
+        with socket.socket() as s:
+            s.bind(("127.0.0.1", 0))
+            port = s.getsockname()[1]
+        root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+        proc = subprocess.Popen(
+            [sys.executable, "-m", "globallinks_spark", "serve", stored,
+             str(port)], cwd=root, stdout=subprocess.DEVNULL)
+        base = f"http://127.0.0.1:{port}"
+        try:
+            t_end = time.monotonic() + 60
+            while True:
+                try:
+                    with urllib.request.urlopen(base + "/api/health") as r:
+                        assert r.status == 200
+                        break
+                except urllib.error.URLError:
+                    assert proc.poll() is None, "serve exited"
+                    assert time.monotonic() < t_end, "serve never healthy"
+                    time.sleep(0.1)
+            status, docs, _ = _post(base, {"domain": "target-one.org"})
+            assert status == 200
+            assert docs == [{
+                "link_url": "https://target-one.org/article",
+                "page_url": "https://a.example.org/", "link_text": "anchor",
+                "no_follow": 0, "no_index": 0, "date_from": "2023-01-01",
+                "date_to": "2023-02-01", "ip": ["10.0.0.1"], "qty": 2,
+            }]
+            children = []
+            for task in os.listdir(f"/proc/{proc.pid}/task"):
+                with open(f"/proc/{proc.pid}/task/{task}/children") as f:
+                    children += f.read().split()
+            assert children == []
+        finally:
+            proc.terminate()
+            proc.wait(timeout=30)
+
+    def test_query_cli_starts_no_spark(self, stored, monkeypatch, capsys):
+        from globallinks_spark import session
+        from globallinks_spark.__main__ import main
+
+        def no_spark(*args, **kwargs):
+            raise AssertionError("query started a SparkSession")
+
+        monkeypatch.setattr(session, "get_spark", no_spark)
+        assert main(["globallinks_spark", "query", stored,
+                     "target-one.org"]) == 0
+        (line,) = capsys.readouterr().out.splitlines()
+        assert json.loads(line)["qty"] == 2

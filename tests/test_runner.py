@@ -14,7 +14,7 @@ from globallinks_spark.runner import (
     run_import,
     run_store,
 )
-from tests.fixtures import write_wat_file
+from tests.fixtures import collect, write_wat_file
 
 
 @pytest.fixture(scope="module")
@@ -53,9 +53,9 @@ class TestPipeline:
 
     def test_query_end_to_end(self, spark, pipeline_dirs):
         _, serving = pipeline_dirs
-        out = query_links(
+        out = collect(query_links(
             spark, serving, LinkQuery(domain="target-one.org")
-        ).collect()
+        ))
         assert len(out) >= 2
         assert all("target-one.org" in r.link_url for r in out)
         ips = {ip for r in out for ip in r.ip}
@@ -63,9 +63,9 @@ class TestPipeline:
 
     def test_query_subdomain(self, spark, pipeline_dirs):
         _, serving = pipeline_dirs
-        out = query_links(
+        out = collect(query_links(
             spark, serving, LinkQuery(domain="www.target-one.org")
-        ).collect()
+        ))
         assert len(out) == 1
         assert out[0].link_url.startswith("https://www.target-one.org")
 
@@ -80,9 +80,9 @@ class TestPipeline:
             run_import(spark, [wat], out, segment=seg)
             run_compact(spark, out, segment=seg)
         run_store(spark, out, serving, buckets=8)
-        rows = query_links(
+        rows = collect(query_links(
             spark, serving, LinkQuery(domain="target-one.org")
-        ).collect()
+        ))
         # same link from both segments → one merged row, qty summed
         merged = [r for r in rows if r.link_url == "https://target-one.org/article"
                   and "alpha" in r.page_url]
@@ -128,7 +128,7 @@ class TestPipeline:
         from globallinks_spark.sources.serving import read_serving_table
 
         plan = read_serving_table(
-            spark, serving, domain="target-one.org", buckets=8
+            spark, serving, domain="target-one.org"
         )._jdf.queryExecution().executedPlan().toString()
         # the bucket predicate must reach the scan as partition pruning
         assert "domain_bucket" in plan

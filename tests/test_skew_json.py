@@ -58,7 +58,7 @@ class TestSaltedAgg:
 
 
 class TestJsonResponse:
-    def test_render(self, spark):
+    def test_render(self):
         import datetime
 
         from globallinks_spark.operators.linkdb import (
@@ -66,14 +66,14 @@ class TestJsonResponse:
             get_domain_links,
             to_json_response,
         )
-        from globallinks_spark.schemas import COMPACT_SCHEMA
+        from tests.fixtures import serving_rows
 
         rows = [(
             "d.com", "", "/p", "", "2", "s.com", "/a", "", "2", "t", 0, 0,
             datetime.date(2023, 1, 1), datetime.date(2023, 2, 1),
             "1.1.1.1", 2,
         )]
-        serving = spark.createDataFrame(rows, COMPACT_SCHEMA)
+        serving = serving_rows(rows)
         out = to_json_response(
             get_domain_links(serving, LinkQuery(domain="d.com"))
         )

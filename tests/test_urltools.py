@@ -118,29 +118,24 @@ class TestSubdomain:
 
 
 class TestReconstruct:
-    def test_full(self, spark):
-        df = spark.createDataFrame(
-            [("2", "www", "e.com", "/a", "x=1")],
-            "sc string, sub string, dom string, p string, q string",
-        )
-        v = df.select(
-            U.reconstruct_url(
-                F.col("sc"), F.col("sub"), F.col("dom"), F.col("p"), F.col("q")
-            ).alias("u")
-        ).first()["u"]
+    """P10 lives in the Arrow query layer (operators/linkdb.py)."""
+
+    @staticmethod
+    def _url(sc, sub, dom, p, q):
+        import pyarrow as pa
+
+        from globallinks_spark.operators.linkdb import reconstruct_url
+
+        return reconstruct_url(*(pa.array([v], pa.string())
+                                 for v in (sc, sub, dom, p, q)))[0].as_py()
+
+    def test_full(self):
+        v = self._url("2", "www", "e.com", "/a", "x=1")
         assert v == "https://www.e.com/a?x=1"
 
-    def test_lossy_zero_scheme(self, spark):
+    def test_lossy_zero_scheme(self):
         # reference decoder maps '0' → https (controller.go:239-244)
-        df = spark.createDataFrame(
-            [("0", "", "e.com", "/", "")],
-            "sc string, sub string, dom string, p string, q string",
-        )
-        v = df.select(
-            U.reconstruct_url(
-                F.col("sc"), F.col("sub"), F.col("dom"), F.col("p"), F.col("q")
-            ).alias("u")
-        ).first()["u"]
+        v = self._url("0", "", "e.com", "/", "")
         assert v == "https://e.com/"
 
 
